@@ -2649,7 +2649,8 @@ object SparkEntry {
       // asserted in DedupSpec.
       val e = t(dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val jitterUdf = udf { (id: Long, xs: Seq[Double]) =>
+      val jitterUdf = udf { (id: Long, xsSeq: Seq[Double]) =>
+        val xs = xsSeq.toArray
         val r = new Array[Double](xs.length)
         var i = 0
         while (i < xs.length) {

@@ -125,54 +125,15 @@ class BalancedKMeans(override val uid: String)
         .withColumn("__gap", col("__b._3"))
         .drop("__b")
 
-      // ONE aggregation: center sums + weight + distortion + gap quantiles.
-      // (d <= 128 per-column codegen layout, same as Update.gradMean tier 1;
-      // wider features fall back to the typed Aggregator + a tiny extra
-      // percentile agg.)
-      var upd: Update.UpdateResult = null
-      var gapQ: Map[Int, Seq[Double]] = Map.empty
-      if (dim <= Update.ColumnSumMaxDim) {
-        // same gradient-column trick as Update.gradMean tier 1: sum grads,
-        // invGrad(mean) on the driver (identity for SE/L1)
-        val needGrad = !(kern.isInstanceOf[graft.kernels.SquaredEuclideanKernel] ||
-          kern.isInstanceOf[graft.kernels.L1Kernel])
-        val gradBase =
-          if (needGrad) {
-            val gradUdf = udf { (xs: Seq[Double]) => bcK.value.grad(xs.toArray) }
-            assigned.withColumn("__grad", gradUdf(col(arrCol)))
-          } else assigned.withColumn("__grad", col(arrCol))
-        val aggs =
-          (0 until dim).map(i => sum(element_at(col("__grad"), i + 1)).as(s"g$i")) ++
-            Seq(count(lit(1)).cast("double").as("wsum"), sum(col("dist")).as("dsum"),
-              percentile_approx(col("__gap"),
-                array(QuantileGrid.map(lit(_)).toIndexedSeq: _*), lit(1000)).as("q"))
-        val rows = gradBase.groupBy(col("cluster")).agg(aggs.head, aggs.tail: _*).collect()
-        var distortion = 0.0
-        val cbuf = Map.newBuilder[Int, Array[Double]]
-        val wbuf = Map.newBuilder[Int, Double]
-        val qbuf = Map.newBuilder[Int, Seq[Double]]
-        rows.foreach { r =>
-          val cid = r.getInt(0)
-          val wsum = r.getDouble(dim + 1)
-          distortion += r.getDouble(dim + 2)
-          qbuf += cid -> r.getSeq[Double](dim + 3)
-          if (wsum > 0) {
-            val mean = new Array[Double](dim)
-            var i = 0
-            while (i < dim) { mean(i) = r.getDouble(i + 1) / wsum; i += 1 }
-            cbuf += cid -> kern.invGrad(mean)
-            wbuf += cid -> wsum
-          }
-        }
-        upd = Update.UpdateResult(cbuf.result(), distortion, wbuf.result())
-        gapQ = qbuf.result()
-      } else {
-        upd = Update.gradMean(assigned, arrCol, lit(1.0), kern, dim)
-        gapQ = assigned.groupBy(col("cluster"))
-          .agg(percentile_approx(col("__gap"),
+      // ONE aggregation: per-cluster center sums (one-slot form) + gap
+      // quantiles, grouped because the quantiles are per cluster.
+      val rows = assigned.groupBy(col("cluster"))
+        .agg(Update.sumsCol(arrCol, lit(1.0), kern, dim),
+          percentile_approx(col("__gap"),
             array(QuantileGrid.map(lit(_)).toIndexedSeq: _*), lit(1000)).as("q"))
-          .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-      }
+        .collect()
+      val upd = Update.grouped(rows, kern, dim)
+      val gapQ = rows.map(r => r.getInt(0) -> r.getSeq[Double](2)).toMap
       distHist += upd.distortion
 
       // next iteration's shed thresholds from this iteration's sizes

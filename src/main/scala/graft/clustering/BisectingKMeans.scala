@@ -79,7 +79,7 @@ class BisectingKMeans(override val uid: String)
     // initial center: global mean (one aggregation)
     val root = Update.gradMean(
       base.withColumn("cluster", lit(0)).withColumn("dist", lit(0.0)),
-      arrCol, wCol, kern, dim)
+      arrCol, wCol, kern, dim, k = 1)
     val centers = scala.collection.mutable.Map[Int, Array[Double]](0 -> root.centers(0))
 
     // A live cluster's rows: a persisted DataFrame while big, a driver

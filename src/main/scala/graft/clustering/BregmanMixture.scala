@@ -1,5 +1,6 @@
 package graft.clustering
 
+import graft.functions.CenterSums
 import graft.kernels.BregmanKernel
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
@@ -16,9 +17,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale design: ONE aggregation job per EM iteration. The E-step
   * responsibilities and the row's log-likelihood contribution are computed
-  * in a single UDF, and a flat typed Aggregator accumulates ALL M-step
-  * statistics at once — k x d gradient sums, k effective counts and the
-  * log-likelihood — in a k*(d+1)+1-double buffer with map-side combine.
+  * in a single UDF; exploded over the k responsibilities, the shared
+  * CenterSums aggregate accumulates ALL M-step statistics at once — k x d
+  * gradient sums and k effective counts — next to the log-likelihood sum,
+  * with map-side combine.
   * The reference runs an RDD hop per M-step (EMIterator.scala:277-300);
   * here nothing but the k x d result crosses to the driver.
   */
@@ -79,7 +81,6 @@ class BregmanMixture(override val uid: String)
     var iter = 0
     var converged = false
     val llHist = Seq.newBuilder[Double]
-    val agg = udaf(new MixtureAggregator(kk, dim))
     val needGrad = !(kern.isInstanceOf[graft.kernels.SquaredEuclideanKernel])
 
     while (iter < $(maxIter) && !converged) {
@@ -111,33 +112,22 @@ class BregmanMixture(override val uid: String)
         val g = if (needGrad) bcK.value.grad(x) else x
         (resp, logNorm, g)
       }
-      val row = data
+      // M-step: each row's grad(x) exploded over its k responsibilities
+      // into the k-slot center sums (γ the weight), plus Σ log-likelihood
+      val r = data
         .withColumn("__em", emUdf(col(arrCol)))
-        .agg(agg(col("__em._1"), col("__em._2"), col("__em._3")).as("r"))
-        .head().getSeq[Double](0)
-
-      // unpack flat buffer: [k*d grad sums][k gamma sums][ll]
-      val ll = row(kk * dim + kk)
+        .select(col("__em._2").as("ll"), col("__em._3").as("g"),
+          posexplode(col("__em._1")).as(Seq("c", "p")))
+        .agg(CenterSums.column(col("g"), col("c"), col("p"), lit(0.0), CenterSums.Identity, kk, dim),
+          sum(when(col("c") === 0, col("ll"))))
+        .head()
+      val upd = Update.dense(CenterSums.values(r, 0), kk, kern, dim)
+      val ll = r.getDouble(1)
       llHist += ll
-      val newCenters = Array.ofDim[Array[Double]](kk)
-      val newWeights = new Array[Double](kk)
-      var c = 0
-      var totalGamma = 0.0
-      while (c < kk) { totalGamma += row(kk * dim + c); c += 1 }
-      c = 0
-      while (c < kk) {
-        val nc = row(kk * dim + c)
-        newWeights(c) = (nc + alpha) / (totalGamma + alpha * kk)
-        if (nc > 0) {
-          val mean = new Array[Double](dim)
-          var j = 0
-          while (j < dim) { mean(j) = row(c * dim + j) / nc; j += 1 }
-          newCenters(c) = kern.invGrad(mean)
-        } else newCenters(c) = centers(c)
-        c += 1
-      }
-      centers = newCenters
-      mixWeights = newWeights
+      val gamma = Array.tabulate(kk)(c => upd.weights.getOrElse(c, 0.0))
+      val totalGamma = gamma.sum
+      mixWeights = gamma.map(nc => (nc + alpha) / (totalGamma + alpha * kk))
+      centers = Array.tabulate(kk)(c => upd.centers.getOrElse(c, centers(c)))
       iter += 1
       if (math.abs(ll - prevLL) < $(tol) * math.max(1.0, math.abs(ll))) converged = true
       prevLL = ll
@@ -223,49 +213,6 @@ class BregmanMixtureModel(
     m.logLikelihoodHistory = logLikelihoodHistory
     copyValues(m, extra).setParent(parent)
   }
-}
-
-/** Flat single-pass EM statistics: buffer layout
-  * [k*d gamma-weighted grad sums][k gamma sums][log-likelihood].
-  */
-class MixtureAggregator(k: Int, dim: Int)
-    extends org.apache.spark.sql.expressions.Aggregator[
-      (Seq[Double], Double, Seq[Double]), Array[Double], Array[Double]] {
-  import org.apache.spark.sql.{Encoder, Encoders}
-
-  private val size = k * dim + k + 1
-
-  override def zero: Array[Double] = new Array[Double](size)
-
-  override def reduce(b: Array[Double], a: (Seq[Double], Double, Seq[Double])): Array[Double] = {
-    val (resp, logNorm, grad) = a
-    var c = 0
-    while (c < k) {
-      val g = resp(c)
-      if (g > 0) {
-        val base = c * dim
-        var j = 0
-        while (j < dim) { b(base + j) += g * grad(j); j += 1 }
-        b(k * dim + c) += g
-      }
-      c += 1
-    }
-    b(k * dim + k) += logNorm
-    b
-  }
-
-  override def merge(b1: Array[Double], b2: Array[Double]): Array[Double] = {
-    var i = 0
-    while (i < size) { b1(i) += b2(i); i += 1 }
-    b1
-  }
-
-  override def finish(r: Array[Double]): Array[Double] = r
-
-  override def bufferEncoder: Encoder[Array[Double]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
-  override def outputEncoder: Encoder[Array[Double]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
 }
 
 object BregmanMixtureModel extends org.apache.spark.ml.util.MLReadable[BregmanMixtureModel] {

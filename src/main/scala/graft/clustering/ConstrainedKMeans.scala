@@ -246,7 +246,7 @@ class ConstrainedKMeans(override val uid: String)
         .withColumn("cluster", col("__b._1"))
         .withColumn("dist", col("__b._2"))
         .drop("__b")
-      val upd = Update.gradMean(assigned, arrCol, lit(1.0), kern, dim)
+      val upd = Update.gradMean(assigned, arrCol, lit(1.0), kern, dim, centers.length)
       distHist += upd.distortion
       val next = centers.indices.flatMap(upd.centers.get).toArray
       val movement =

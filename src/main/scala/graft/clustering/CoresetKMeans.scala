@@ -136,7 +136,7 @@ class CoresetKMeans(override val uid: String)
     var refined = 0
     while (usedCoreset && refined < $(refinementIterations)) {
       val assigned = Assignment.assign(data, arrCol, kern, centers, $(assignmentStrategy), oneShot = false)
-      val upd = Update.gradMean(assigned, arrCol, lit(1.0), kern, dim)
+      val upd = Update.gradMean(assigned, arrCol, lit(1.0), kern, dim, centers.length)
       val next = centers.indices.flatMap(upd.centers.get).toArray
       if (next.length == centers.length) centers = next
       refined += 1

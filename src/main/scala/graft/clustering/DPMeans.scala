@@ -77,7 +77,7 @@ class DPMeans(override val uid: String)
         case Some(r) =>
           centers = centers :+ r.getSeq[Double](0).toArray
         case None =>
-          val upd = Update.gradMean(assigned, arrCol, wCol, kern, dim)
+          val upd = Update.gradMean(assigned, arrCol, wCol, kern, dim, centers.length)
           distHist += upd.distortion
           val newCenters = centers.indices.flatMap(upd.centers.get).toArray
           val movement =

@@ -241,7 +241,7 @@ object ElkanLloydsIterator {
       // center update from current assignments; distortion ~ sum w/2 ub^2
       val assigned = state
         .withColumn("dist", col("ub") * col("ub") * lit(0.5))
-      val upd = Update.gradMean(assigned, cfg.featuresCol, col("__w"), cfg.kernel, dim)
+      val upd = Update.gradMean(assigned, cfg.featuresCol, col("__w"), cfg.kernel, dim, centers.length)
 
       val missing = centers.indices.filterNot(upd.centers.contains)
       val newCenters: Array[Array[Double]] =
@@ -284,8 +284,9 @@ object ElkanLloydsIterator {
           val bcM = sc.broadcast(moves)
           val maxM = maxMove
           val stepUdf =
-            if (perCenter) udf { (xs: Seq[Double], cl: Int, ub: Double, lbs: Seq[Double]) =>
+            if (perCenter) udf { (xs: Seq[Double], cl: Int, ub: Double, lbSeq: Seq[Double]) =>
               // Elkan step: decay each bound by ITS center's movement
+              val lbs = lbSeq.toArray
               val cs = bcC.value
               val cd = bcD.value
               val mv = bcM.value

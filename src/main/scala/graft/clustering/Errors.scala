@@ -40,6 +40,11 @@ object GKMError {
     val message = s"invalid parameter '$name': $detail"
     val remediation = "Adjust the parameter to a value in its documented range"
   }
+  case class ClusterIdOutOfRange(id: String, k: Int) extends GKMError {
+    val message = s"cluster id $id is outside the dense range [0, $k)"
+    val remediation = "Pass dense ids 0 until k, or leave k out of Update.gradMean so the " +
+      "sums are grouped by the ids as given"
+  }
   case class DriverCapExceeded(algorithm: String, n: Long, cap: Long) extends GKMError {
     val message = s"$algorithm is driver-local; n=$n exceeds the cap of $cap rows"
     val remediation = "Use the distributed variant (Nystrom/CLARA/BisectingKMeans) " +

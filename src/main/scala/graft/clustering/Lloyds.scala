@@ -1,8 +1,9 @@
 package graft.clustering
 
+import graft.functions.CenterSums
 import graft.kernels._
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -311,55 +312,10 @@ object Assignment {
   }
 }
 
-/** Typed aggregator summing (gradient * weight, weight, dist * weight) per
-  * cluster with ONE buffer per group — the plan is constant-size in the
-  * dimension (a d-wide `sum(element_at)` layout makes the logical plan
-  * O(d) and breaks codegen at embedding widths; observed "plan too large"
-  * truncation at d=64 in round 1). Partial aggregation still happens
-  * map-side (ObjectHashAggregate), so the shuffle carries k rows per
-  * partition, exactly like the per-column formulation.
-  * (Direct analogue of the reference's aggregateByKey hop, re-expressed as
-  * a Spark `Aggregator`; reference: df/strategies/UpdateStrategy.scala:46-135.)
-  */
-class CentroidAggregator(dim: Int)
-    extends org.apache.spark.sql.expressions.Aggregator[
-      (Seq[Double], Double, Double), (Array[Double], Double, Double), (Seq[Double], Double, Double)] {
-  import org.apache.spark.sql.{Encoder, Encoders}
-
-  override def zero: (Array[Double], Double, Double) = (new Array[Double](dim), 0.0, 0.0)
-
-  override def reduce(
-      b: (Array[Double], Double, Double),
-      a: (Seq[Double], Double, Double)): (Array[Double], Double, Double) = {
-    val (g, w, d) = a
-    val s = b._1
-    var i = 0
-    while (i < dim) { s(i) += g(i) * w; i += 1 }
-    (s, b._2 + w, b._3 + d * w)
-  }
-
-  override def merge(
-      b1: (Array[Double], Double, Double),
-      b2: (Array[Double], Double, Double)): (Array[Double], Double, Double) = {
-    val s = b1._1
-    val t = b2._1
-    var i = 0
-    while (i < dim) { s(i) += t(i); i += 1 }
-    (s, b1._2 + b2._2, b1._3 + b2._3)
-  }
-
-  override def finish(r: (Array[Double], Double, Double)): (Seq[Double], Double, Double) =
-    (r._1.toSeq, r._2, r._3)
-
-  override def bufferEncoder: Encoder[(Array[Double], Double, Double)] =
-    Encoders.product[(Array[Double], Double, Double)]
-  override def outputEncoder: Encoder[(Seq[Double], Double, Double)] =
-    Encoders.product[(Seq[Double], Double, Double)]
-}
-
 /** Center update + distortion in ONE aggregation job.
   *
-  * For a Bregman kernel the new center is invGrad(weighted mean of grads).
+  * For a Bregman kernel the new center is invGrad(weighted mean of grads);
+  * the sums come from the native [[graft.functions.CenterSums]] aggregate.
   * (Replaces the reference's rdd.aggregateByKey + collectAsMap hop,
   * reference: df/strategies/UpdateStrategy.scala:46-135.)
   */
@@ -371,77 +327,61 @@ object Update {
       distortion: Double,
       weights: Map[Int, Double])
 
-  /** Max dimension for the per-column codegen'd sum path. Below this the
-    * d+2 `sum(element_at)` aggregates stay inside one whole-stage-codegen'd
-    * HashAggregate and beat the Aggregator path ~2x (no per-row Seq[Double]
-    * boxing through ObjectHashAggregate); above it the plan width itself
-    * becomes the bottleneck and the constant-size typed Aggregator wins.
+  /** Gradient-mean update of an assigned frame (`cluster` + `dist`).
+    *
+    * @param k dense cluster ids `0 until k`: one ungrouped aggregate fills
+    *   a k×(dim+2) buffer per partition. Leave it out (0) when the ids are
+    *   arbitrary ints: the sums are then grouped by `cluster`, one slot per
+    *   group. Clusters with no positive weight are absent from `centers`.
     */
-  val ColumnSumMaxDim = 128
-
   def gradMean(
       assigned: DataFrame,
       featuresCol: String,
       weightCol: Column,
       kernel: BregmanKernel,
-      dim: Int): UpdateResult = {
-    val sc = assigned.sparkSession.sparkContext
-    val bk = sc.broadcast(kernel)
-    val needGrad = !(kernel.isInstanceOf[SquaredEuclideanKernel] || kernel.isInstanceOf[L1Kernel])
-    val gradCol: Column =
-      if (needGrad) {
-        val gradUdf = udf { (xs: Seq[Double]) => bk.value.grad(xs.toArray) }
-        gradUdf(col(featuresCol))
-      } else col(featuresCol) // identity grad: skip the UDF entirely
+      dim: Int,
+      k: Int = 0): UpdateResult = {
+    val rows = sumsFrame(assigned, featuresCol, weightCol, kernel, dim, k).collect()
+    if (k <= 0) grouped(rows, kernel, dim) else dense(CenterSums.values(rows(0), 0), k, kernel, dim)
+  }
 
+  /** The one aggregation [[gradMean]] runs (PlanShapeSpec pins its plan). */
+  private[graft] def sumsFrame(assigned: DataFrame, featuresCol: String, weightCol: Column,
+      kernel: BregmanKernel, dim: Int, k: Int): DataFrame =
+    if (k <= 0) assigned.groupBy(col("cluster")).agg(sumsCol(featuresCol, weightCol, kernel, dim))
+    else assigned.agg(sumsCol(featuresCol, weightCol, kernel, dim, k, col("cluster")))
+
+  /** The [[graft.functions.CenterSums]] column over an assigned frame's
+    * features and `dist`: `k` slots indexed by `slot`, or by default the
+    * one-slot form for use under a `groupBy`.
+    */
+  def sumsCol(featuresCol: String, weightCol: Column, kernel: BregmanKernel, dim: Int,
+      k: Int = 1, slot: Column = lit(0)): Column =
+    CenterSums.column(col(featuresCol), slot, weightCol, col("dist"), kernel, k, dim)
+
+  /** Update from one packed k-slot buffer (slot = cluster id). */
+  def dense(sums: Array[Double], k: Int, kernel: BregmanKernel, dim: Int): UpdateResult =
+    fold(Iterator.range(0, k).map(c => (c, sums, c)), kernel, dim)
+
+  /** Update from grouped rows: (cluster id, one-slot buffer, ...). */
+  def grouped(rows: Array[Row], kernel: BregmanKernel, dim: Int): UpdateResult =
+    fold(rows.iterator.map(r => (r.getInt(0), CenterSums.values(r, 1), 0)), kernel, dim)
+
+  private def fold(slots: Iterator[(Int, Array[Double], Int)], kernel: BregmanKernel,
+      dim: Int): UpdateResult = {
     var distortion = 0.0
     val centers = Map.newBuilder[Int, Array[Double]]
     val weights = Map.newBuilder[Int, Double]
-
-    if (dim <= ColumnSumMaxDim) {
-      // Tier 1: d+2 codegen'd column sums in ONE HashAggregate — no object
-      // aggregation, no boxing; the shuffle carries k rows of d+2 doubles.
-      val base = assigned
-        .withColumn("__grad", gradCol)
-        .withColumn("__w", weightCol.cast("double"))
-      val aggs =
-        (0 until dim).map(i => sum(element_at(col("__grad"), i + 1) * col("__w")).as(s"g$i")) ++
-          Seq(sum(col("__w")).as("wsum"), sum(col("dist") * col("__w")).as("dsum"))
-      val rows = base.groupBy(col("cluster")).agg(aggs.head, aggs.tail: _*).collect()
-      rows.foreach { r =>
-        val cid = r.getInt(0)
-        val wsum = r.getDouble(dim + 1)
-        distortion += r.getDouble(dim + 2)
-        if (wsum > 0) {
-          val mean = new Array[Double](dim)
-          var i = 0
-          while (i < dim) { mean(i) = r.getDouble(i + 1) / wsum; i += 1 }
-          centers += cid -> kernel.invGrad(mean)
-          weights += cid -> wsum
-        }
-      }
-    } else {
-      // Tier 2: constant-size typed Aggregator — plan size independent of d
-      // (required at embedding widths; d=1024 covered by tests).
-      val centroidAgg = udaf(new CentroidAggregator(dim))
-      val rows = assigned
-        .withColumn("__grad", gradCol)
-        .groupBy(col("cluster"))
-        .agg(centroidAgg(col("__grad"), weightCol.cast("double"), col("dist")).as("r"))
-        .select(col("cluster"), col("r._1").as("gsum"), col("r._2").as("wsum"), col("r._3").as("dsum"))
-        .collect()
-      rows.foreach { r =>
-        val cid = r.getInt(0)
-        val gsum = r.getSeq[Double](1)
-        val wsum = r.getDouble(2)
-        distortion += r.getDouble(3)
-        if (wsum > 0) {
-          val mean = new Array[Double](dim)
-          var i = 0
-          while (i < dim) { mean(i) = gsum(i) / wsum; i += 1 }
-          centers += cid -> kernel.invGrad(mean)
-          weights += cid -> wsum
-        }
+    slots.foreach { case (cid, sums, s) =>
+      val base = s * (dim + 2)
+      val wsum = sums(base + dim)
+      distortion += sums(base + dim + 1)
+      if (wsum > 0) {
+        val mean = new Array[Double](dim)
+        var i = 0
+        while (i < dim) { mean(i) = sums(base + i) / wsum; i += 1 }
+        centers += cid -> kernel.invGrad(mean)
+        weights += cid -> wsum
       }
     }
     UpdateResult(centers.result(), distortion, weights.result())
@@ -550,7 +490,7 @@ object LloydsIterator {
       val assigned = Assignment.assign(data, cfg.featuresCol, cfg.kernel, centers, cfg.assignmentStrategy, oneShot = false)
       val upd =
         if (isMedian) Update.median(assigned, cfg.featuresCol, wCol, dim)
-        else Update.gradMean(assigned, cfg.featuresCol, wCol, cfg.kernel, dim)
+        else Update.gradMean(assigned, cfg.featuresCol, wCol, cfg.kernel, dim, centers.length)
 
       // Empty-cluster handling: reseed missing ids from a random sample
       // (reference: df/strategies/EmptyClusterHandler.scala:41-93, with the

@@ -1,5 +1,6 @@
 package graft.clustering
 
+import graft.functions.CenterSums
 import org.apache.spark.ml.Estimator
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.Identifiable
@@ -13,8 +14,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * Batches stay ON EXECUTORS — the reference collects every batch to the
   * driver (ml/MiniBatchKMeans.scala:243-247); here a batch is a Bernoulli
-  * sample that is assigned via broadcast centers and reduced to k
-  * (sum, count, distortion) rows by the typed Aggregator. The driver-side
+  * sample that is assigned via broadcast centers and reduced to one
+  * k-slot (sum, count, distortion) buffer by the native CenterSums
+  * aggregate. The driver-side
   * merge c' = (n_c*c + sum_c)/(n_c + m_c) is EXACTLY the reference's
   * per-point eta = 1/count running mean, applied batch-at-a-time.
   */
@@ -121,7 +123,6 @@ class MiniBatchKMeans(override val uid: String)
         else CenterInit.localKMeansPlusPlusBest(pool, b0w.take(poolN), $(k), kern, $(seed))
     }
     val counts = new Array[Double]($(k))
-    val aggFn = udaf(new CentroidAggregator(dim))
 
     val distHist = Seq.newBuilder[Double]
     var nReassigned = 0L
@@ -183,14 +184,9 @@ class MiniBatchKMeans(override val uid: String)
       // ranked by distance to the PRE-update centers on every deployment)
       val assigned = Assignment.assign(batch, arrCol, kern,
         centers.map(_.clone()), $(assignmentStrategy), oneShot = false)
-      val rows = assigned
-        .groupBy(col("cluster"))
-        .agg(aggFn(col(arrCol), wCol.cast("double"), col("dist")).as("r"))
-        .select(col("cluster"), col("r._1"), col("r._2"), col("r._3"))
-        .collect()
-
       val (batchW, batchCost) =
-        MiniBatchKMeans.mergeBatch(rows, centers, counts)
+        MiniBatchKMeans.mergeBatch(MiniBatchKMeans.batchSums(assigned, arrCol, wCol, centers),
+          centers, counts)
       // dying-center rule AFTER the merge (the counts it tests include
       // this batch); candidate costs are vs the PRE-update centers (the
       // assigned plan owns a private copy) — same vantage as the
@@ -231,35 +227,47 @@ class MiniBatchKMeans(override val uid: String)
 object MiniBatchKMeans
     extends org.apache.spark.ml.util.DefaultParamsReadable[MiniBatchKMeans] {
 
-  import org.apache.spark.sql.{Column, DataFrame, Row}
+  import org.apache.spark.sql.{Column, DataFrame}
 
-  /** The Sculley closed-form merge of one batch's per-cluster
-    * (cluster, sum, weight, cost) aggregate rows into (centers, counts),
+  /** One assigned batch's per-cluster (Σ x·w, Σ w, Σ dist·w) as one
+    * packed k-slot [[CenterSums]] buffer: plain feature
+    * sums (identity kernel), whatever the divergence.
+    */
+  private[clustering] def batchSums(assigned: DataFrame, arrCol: String, w: Column,
+      centers: Array[Array[Double]]): Array[Double] = {
+    val dim = if (centers.isEmpty) 0 else centers.head.length
+    CenterSums.values(assigned.agg(Update.sumsCol(arrCol, w,
+      CenterSums.Identity, dim, centers.length, col("cluster"))).head(), 0)
+  }
+
+  /** The Sculley closed-form merge of one batch's packed per-cluster
+    * (sum, weight, cost) buffer ([[batchSums]]) into (centers, counts),
     * IN PLACE — c' = (n_c·c + sum_c)/(n_c + m_c), exactly the per-point
     * eta = 1/count running mean applied batch-at-a-time. Returns
     * (batchWeight, batchCost). Shared by [[MiniBatchKMeans.fit]]'s loop
     * and [[step]] so the gate-verified body IS the training body.
     */
-  private[clustering] def mergeBatch(rows: Array[Row],
+  private[clustering] def mergeBatch(sums: Array[Double],
       centers: Array[Array[Double]], counts: Array[Double]): (Double, Double) = {
     val dim = if (centers.isEmpty) 0 else centers.head.length
     var batchW = 0.0
     var batchCost = 0.0
-    rows.foreach { r =>
-      val c = r.getInt(0)
-      val xsum = r.getSeq[Double](1)
-      val w = r.getDouble(2)
-      batchCost += r.getDouble(3)
+    var c = 0
+    while (c < centers.length) {
+      val base = c * (dim + 2)
+      val w = sums(base + dim)
+      batchCost += sums(base + dim + 1)
       batchW += w
       if (w > 0) {
         val newCount = counts(c) + w
         var i = 0
         while (i < dim) {
-          centers(c)(i) = (counts(c) * centers(c)(i) + xsum(i)) / newCount
+          centers(c)(i) = (counts(c) * centers(c)(i) + sums(base + i)) / newCount
           i += 1
         }
         counts(c) = newCount
       }
+      c += 1
     }
     (batchW, batchCost)
   }
@@ -365,13 +373,7 @@ object MiniBatchKMeans
     // mutates cs — candidates must rank by the PRE-update distances
     val assigned = Assignment.assign(dfArr, arrCol, kern,
       centers.map(_.clone()), strategy = "auto", oneShot = false)
-    val aggFn = udaf(new CentroidAggregator(dim))
-    val rows = assigned
-      .groupBy(col("cluster"))
-      .agg(aggFn(col(arrCol), lit(1.0), col("dist")).as("r"))
-      .select(col("cluster"), col("r._1"), col("r._2"), col("r._3"))
-      .collect()
-    mergeBatch(rows, cs, cn)
+    mergeBatch(batchSums(assigned, arrCol, lit(1.0), cs), cs, cn)
     if (reassignmentRatio > 0)
       reassignDying(assigned, arrCol, cs, cn, reassignmentRatio,
         if (idCol.isEmpty) Nil else Seq(col(idCol).asc))

@@ -1,5 +1,6 @@
 package graft.clustering
 
+import graft.functions.CenterSums
 import graft.kernels._
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
@@ -133,6 +134,7 @@ class MultiViewKMeans(override val uid: String)
         val ws = bcW.value
         val nv = cs.length
         val kk = cs(0).length
+        val xs = views.iterator.map(_.toArray).toArray
         var best = 0
         var bd = Double.MaxValue
         var c = 0
@@ -141,7 +143,7 @@ class MultiViewKMeans(override val uid: String)
             else if (strat == "min") Double.MaxValue else 0.0
           var v = 0
           while (v < nv) {
-            val d = ks(v).divergence(views(v).toArray, cs(v)(c))
+            val d = ks(v).divergence(xs(v), cs(v)(c))
             strat match {
               case "weighted" => combined += ws(v) * d
               case "max"      => if (d > combined) combined = d
@@ -157,7 +159,7 @@ class MultiViewKMeans(override val uid: String)
         var off = 0
         var v = 0
         while (v < nv) {
-          val g = ks(v).grad(views(v).toArray)
+          val g = ks(v).grad(xs(v))
           System.arraycopy(g, 0, grad, off, g.length)
           off += g.length
           v += 1
@@ -166,31 +168,29 @@ class MultiViewKMeans(override val uid: String)
       }
       val assigned = proj.withColumn("__a", assignUdf(viewArr))
         .select(col("__a._1").as("cluster"), col("__a._3").as("grad"), col("__a._2").as("dist"))
-      val aggFn = udaf(new CentroidAggregator(dimTotal))
-      val rows = assigned.groupBy(col("cluster"))
-        .agg(aggFn(col("grad"), lit(1.0), col("dist")).as("r"))
-        .select(col("cluster"), col("r._1"), col("r._2"), col("r._3"))
-        .collect()
+      // the concatenated gradients are already in dual space: plain sums
+      val kk = centers(0).length
+      val gsum = CenterSums.values(assigned.agg(CenterSums.column(
+        col("grad"), col("cluster"), lit(1.0), col("dist"),
+        CenterSums.Identity, kk, dimTotal)).head(), 0)
 
       var distortion = 0.0
       val newByCluster = scala.collection.mutable.Map[Int, Array[Array[Double]]]()
-      rows.foreach { r =>
-        val cid = r.getInt(0)
-        val gsum = r.getSeq[Double](1)
-        val wsum = r.getDouble(2)
-        distortion += r.getDouble(3)
+      (0 until kk).foreach { cid =>
+        val base = cid * (dimTotal + 2)
+        val wsum = gsum(base + dimTotal)
+        distortion += gsum(base + dimTotal + 1)
         if (wsum > 0) {
           newByCluster(cid) = Array.tabulate(viewSpecs.length) { v =>
             val mean = new Array[Double](dims(v))
             var i = 0
-            while (i < dims(v)) { mean(i) = gsum(offsets(v) + i) / wsum; i += 1 }
+            while (i < dims(v)) { mean(i) = gsum(base + offsets(v) + i) / wsum; i += 1 }
             kernels(v).invGrad(mean)
           }
         }
       }
       distHist += distortion
 
-      val kk = centers(0).length
       val missing = (0 until kk).filterNot(newByCluster.contains)
       var movement = 0.0
       if (missing.nonEmpty) {

@@ -1,5 +1,6 @@
 package graft.clustering
 
+import graft.functions.CenterSums
 import org.apache.spark.ml.Estimator
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.Identifiable
@@ -85,9 +86,9 @@ class RobustKMeans(override val uid: String)
     // LAGGED trim threshold: iteration i weights by the quantile measured
     // in iteration i-1 (iteration 1 runs untrimmed), so the quantile rides
     // in the SAME aggregation pass as the center update instead of costing
-    // a dedicated global-agg job per iteration — one rollup(cluster) pass
-    // yields the per-cluster trimmed sums AND the grand-total distance
-    // quantile together (r4 bench: 3 jobs/iter -> 2).
+    // a dedicated global-agg job per iteration — one aggregation yields
+    // the per-cluster trimmed sums AND the global distance quantile
+    // together (r4 bench: 3 jobs/iter -> 2).
     var thr = Double.MaxValue
 
     while (iter < $(maxIter) && !converged) {
@@ -98,7 +99,7 @@ class RobustKMeans(override val uid: String)
         case _ => // trim and noiseCluster share the trimmed update
           when(col("dist") <= thr, userW).otherwise(lit(0.0))
       }
-      val (upd, newThr) = robustUpdate(assigned, arrCol, robustW, kern, dim, keepQuantile)
+      val (upd, newThr) = robustUpdate(assigned, arrCol, robustW, kern, dim, centers.length, keepQuantile)
       if ($(outlierFraction) > 0.0) thr = newThr
       distHist += upd.distortion
       // Noise-cluster cull: D^2-weighted init loves outliers, and a center
@@ -151,11 +152,9 @@ class RobustKMeans(override val uid: String)
     model
   }
 
-  /** Trimmed center update AND the next trim threshold in ONE pass:
-    * rollup(cluster) emits the per-cluster weighted gradient sums plus a
-    * grand-total row whose (unweighted) distance quantile becomes the next
-    * iteration's threshold. Wide features (d > ColumnSumMaxDim) fall back
-    * to the typed-Aggregator update + a separate quantile agg.
+  /** Trimmed center update AND the next trim threshold in ONE pass: the
+    * ungrouped center sums and the (unweighted) global distance quantile
+    * that becomes the next iteration's threshold, in one aggregation.
     */
   private def robustUpdate(
       assigned: DataFrame,
@@ -163,51 +162,11 @@ class RobustKMeans(override val uid: String)
       w: Column,
       kern: graft.kernels.BregmanKernel,
       dim: Int,
+      k: Int,
       keepQuantile: Double): (Update.UpdateResult, Double) = {
-    if (dim > Update.ColumnSumMaxDim) {
-      val upd = Update.gradMean(assigned, arrCol, w, kern, dim)
-      val thr = assigned.agg(percentile_approx(col("dist"), lit(keepQuantile), lit(10000)))
-        .head().getDouble(0)
-      return (upd, thr)
-    }
-    val sc = assigned.sparkSession.sparkContext
-    val bk = sc.broadcast(kern)
-    val needGrad = !(kern.isInstanceOf[graft.kernels.SquaredEuclideanKernel] ||
-      kern.isInstanceOf[graft.kernels.L1Kernel])
-    val base = {
-      val g =
-        if (needGrad) {
-          val gradUdf = udf { (xs: Seq[Double]) => bk.value.grad(xs.toArray) }
-          assigned.withColumn("__grad", gradUdf(col(arrCol)))
-        } else assigned.withColumn("__grad", col(arrCol))
-      g.withColumn("__w", w.cast("double"))
-    }
-    val aggs =
-      (0 until dim).map(i => sum(element_at(col("__grad"), i + 1) * col("__w")).as(s"g$i")) ++
-        Seq(sum(col("__w")).as("wsum"), sum(col("dist") * col("__w")).as("dsum"),
-          percentile_approx(col("dist"), lit(keepQuantile), lit(10000)).as("q"))
-    val rows = base.rollup(col("cluster")).agg(aggs.head, aggs.tail: _*).collect()
-    var distortion = 0.0
-    var thr = Double.MaxValue
-    val centers = Map.newBuilder[Int, Array[Double]]
-    val weights = Map.newBuilder[Int, Double]
-    rows.foreach { r =>
-      if (r.isNullAt(0)) {
-        thr = r.getDouble(dim + 3) // grand-total row: global distance quantile
-      } else {
-        val cid = r.getInt(0)
-        val wsum = r.getDouble(dim + 1)
-        distortion += r.getDouble(dim + 2)
-        if (wsum > 0) {
-          val mean = new Array[Double](dim)
-          var i = 0
-          while (i < dim) { mean(i) = r.getDouble(i + 1) / wsum; i += 1 }
-          centers += cid -> kern.invGrad(mean)
-          weights += cid -> wsum
-        }
-      }
-    }
-    (Update.UpdateResult(centers.result(), distortion, weights.result()), thr)
+    val r = assigned.agg(Update.sumsCol(arrCol, w, kern, dim, k, col("cluster")),
+      percentile_approx(col("dist"), lit(keepQuantile), lit(10000))).head()
+    (Update.dense(CenterSums.values(r, 0), k, kern, dim), r.getDouble(1))
   }
 
   override def transformSchema(schema: StructType): StructType =

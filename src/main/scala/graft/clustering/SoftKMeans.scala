@@ -1,5 +1,6 @@
 package graft.clustering
 
+import graft.functions.CenterSums
 import graft.kernels._
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
@@ -77,8 +78,8 @@ trait SoftKMeansParams extends GeneralizedKMeansParams {
   * The M-step is fully DISTRIBUTED — the reference collects every row's
   * membership vector to the driver (ml/SoftKMeans.scala:335-338); here the
   * per-row (probability, divergence) pairs are exploded to (cluster, p, d)
-  * and aggregated with the same typed Aggregator as the hard path, giving
-  * new centers AND the soft cost in ONE hash-aggregate job per iteration.
+  * and aggregated by the same CenterSums aggregate as the hard path, giving
+  * new centers AND the soft cost in ONE aggregation job per iteration.
   * The soft Bregman centroid is the gamma-weighted primal mean (the
   * minimizer of sum p*D_F(x, mu) over mu for any Bregman divergence).
   */
@@ -137,27 +138,27 @@ class SoftKMeans(override val uid: String)
     var converged = false
     val distHist = Seq.newBuilder[Double]
     val moveHist = Seq.newBuilder[Double]
-    val aggFn = udaf(new CentroidAggregator(dim))
 
     while (iter < $(maxIter) && !converged) {
       val pd = SoftAssignments.probDistUdf(centers, kern, $(beta), $(minMembership))
       // one job: per-cluster gamma-weighted sums + global soft cost
-      val rows = data
+      val kk = centers.length
+      val sums = CenterSums.values(data
         .select(col(arrCol).as("f"), wCol.cast("double").as("w"), pd(col(arrCol)).as("pd"))
         .select(col("f"), col("w"), posexplode(col("pd")).as(Seq("c", "s")))
-        .groupBy(col("c"))
-        .agg(aggFn(col("f"), col("s._1") * col("w"), col("s._2")).as("r"))
-        .select(col("c"), col("r._1").as("xsum"), col("r._2").as("psum"), col("r._3").as("dsum"))
-        .collect()
+        .agg(CenterSums.column(col("f"), col("c"), col("s._1") * col("w"), col("s._2"),
+          CenterSums.Identity, kk, dim))
+        .head(), 0)
 
       val newCenters = centers.clone()
       var cost = 0.0
-      rows.foreach { r =>
-        val c = r.getInt(0)
-        val xsum = r.getSeq[Double](1)
-        val psum = r.getDouble(2)
-        cost += r.getDouble(3)
-        if (psum > 1e-10) newCenters(c) = xsum.map(_ / psum).toArray
+      var c = 0
+      while (c < kk) {
+        val base = c * (dim + 2)
+        val psum = sums(base + dim)
+        cost += sums(base + dim + 1)
+        if (psum > 1e-10) newCenters(c) = Array.tabulate(dim)(i => sums(base + i) / psum)
+        c += 1
       }
       var movement = 0.0
       var i = 0
@@ -244,21 +245,21 @@ class SoftKMeansModel(
     * are uniform, ~1 when one cluster dominates.
     * (reference: ml/SoftKMeansModel.scala:120-160 soft metrics.)
     * One aggregation job: the probability vectors sum through the shared
-    * constant-size typed aggregator; entropy is k-element driver math.
+    * one-slot [[CenterSums]] aggregate; entropy is k-element driver math.
     */
   def effectiveClusters(dataset: Dataset[_]): Double = {
     val k = clusterCenters.length
     val probs = transform(dataset).select(col($(probabilityCol)))
-    val aggFn = udaf(new CentroidAggregator(k))
-    val r = probs.agg(aggFn(col($(probabilityCol)), lit(1.0), lit(0.0)).as("r"))
-      .select(col("r._1"), col("r._2")).head()
-    val sums = r.getSeq[Double](0)
-    val n = r.getDouble(1)
+    val sums = CenterSums.values(probs.agg(CenterSums.column(col($(probabilityCol)), lit(0),
+      lit(1.0), lit(0.0), CenterSums.Identity, 1, k)).head(), 0)
+    val n = sums(k)
     if (n <= 0) return 0.0
     var h = 0.0
-    sums.foreach { s =>
-      val p = s / n
+    var c = 0
+    while (c < k) {
+      val p = sums(c) / n
       if (p > 0) h -= p * math.log(p)
+      c += 1
     }
     math.exp(h)
   }

@@ -19,9 +19,9 @@ import org.apache.spark.storage.StorageLevel
   *  - assignment: one UDF pass, O(k * nnz) per row against broadcast dense
   *    centers with precomputed ||mu||^2 (the 700+-dim sparse-text use case
   *    in the reference's README is exactly this shape);
-  *  - update: a typed Aggregator whose reduce scatters nnz values into a
-  *    dense k x d buffer — the shuffle carries k rows, the map side does
-  *    O(nnz) adds per row (a densify-first plan does O(d));
+  *  - update: one shuffle-free job whose partitions scatter nnz values
+  *    into a dense k x d buffer, tree-reduced to the driver — O(nnz) adds
+  *    per row (a densify-first plan does O(d));
   *  - `auto` mode samples rows, estimates the density ratio and falls back
   *    to the dense engine when the data isn't actually sparse.
   * Supported sparse divergences: squaredEuclidean and spherical (depend on
@@ -137,16 +137,19 @@ class SparseKMeans(override val uid: String)
             (d.size, idx, idx.map(d(_)))
         }
       }
-      else udf { (a: Seq[Double]) =>
+      else udf { (xs: Seq[Double]) =>
+        val a = xs.toArray
         val idx = a.indices.filter(a(_) != 0.0)
         (a.length, idx, idx.map(a(_)))
       }
     val data = df.select(toSparse(col($(featuresCol))).as("s"))
       .select(col("s._1").as("d"), col("s._2").as("idx"), col("s._3").as("vals"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = data.count()
+    // row count and dimension in one aggregation (it also fills the cache)
+    val stats = data.agg(count(lit(1)), max(col("d"))).head()
+    val n = stats.getLong(0)
     require(n > 0, "empty input")
-    val dim = data.select(col("d")).head().getInt(0)
+    val dim = stats.getInt(1)
 
     // init: k distinct sampled rows, densified driver-side (k x d only)
     def densify(idx: Seq[Int], vals: Seq[Double]): Array[Double] = {
@@ -178,7 +181,6 @@ class SparseKMeans(override val uid: String)
     }
     if (spherical) centers = centers.map(SparseKMeans.l2normalize)
 
-    val agg = udaf(new SparseCentroidAggregator(dim))
     var iter = 0
     var converged = false
     val distHist = Seq.newBuilder[Double]
@@ -193,7 +195,9 @@ class SparseKMeans(override val uid: String)
         case "l1" => centers.map(c => c.map(math.abs).sum)
         case _    => centers.map(_ => 0.0)
       })
-      val asgUdf = udf { (idx: Seq[Int], vals: Seq[Double]) =>
+      val asgUdf = udf { (idxSeq: Seq[Int], valsSeq: Seq[Double]) =>
+        val idx = idxSeq.toArray
+        val vals = valsSeq.toArray
         val cs = bcC.value
         val cn = bcN.value
         var x2 = 0.0
@@ -263,16 +267,13 @@ class SparseKMeans(override val uid: String)
               transform(col("vals"),
                 v => org.apache.spark.sql.functions.log((v + lit(eps)) / lit(eps))))
           else assigned
-        val rows = aggInput.groupBy(col("cluster"))
-          .agg(agg(col("idx"), col("vals"), col("dist")).as("r"))
-          .select(col("cluster"), col("r._1").as("vsum"), col("r._2").as("cnt"), col("r._3").as("dsum"))
-          .collect()
-        rows.foreach { r =>
-          val cid = r.getInt(0)
-          val vsum = r.getSeq[Double](1).toArray
-          val cnt = r.getDouble(2)
-          distortion += r.getDouble(3)
+        val sums = SparseKMeans.clusterSums(aggInput, centers.length, dim)
+        centers.indices.foreach { cid =>
+          val base = cid * (dim + 2)
+          val cnt = sums(base + dim)
+          distortion += sums(base + dim + 1)
           if (cnt > 0) {
+            val vsum = java.util.Arrays.copyOfRange(sums, base, base + dim)
             var i = 0
             if (mode == "kl") {
               while (i < vsum.length) { vsum(i) = eps * math.exp(vsum(i) / cnt); i += 1 }
@@ -357,6 +358,32 @@ class SparseKMeans(override val uid: String)
 }
 
 object SparseKMeans extends org.apache.spark.ml.util.DefaultParamsReadable[SparseKMeans] {
+
+  /** Per-cluster (Σ x, row count, Σ dist) over (cluster, idx, vals, dist)
+    * rows as one k×(dim+2) buffer (the CenterSums layout), in ONE job with
+    * no shuffle: each partition scatters its rows' nnz values into a dense
+    * buffer — O(nnz) adds per row, a densify-first plan does O(d) — and the
+    * partition buffers are tree-reduced.
+    */
+  private[clustering] def clusterSums(assigned: DataFrame, k: Int, dim: Int): Array[Double] = {
+    val width = dim + 2
+    assigned.select(col("cluster"), col("idx"), col("vals"), col("dist")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val buf = new Array[Double](k * width)
+        rows.foreach { r =>
+          val base = r.getInt(0) * width
+          val idx = r.getArray(1)
+          val vals = r.getArray(2)
+          var i = 0
+          while (i < idx.numElements()) { buf(base + idx.getInt(i)) += vals.getDouble(i); i += 1 }
+          buf(base + dim) += 1.0
+          buf(base + dim + 1) += r.getDouble(3)
+        }
+        Iterator.single(buf)
+      }
+      .treeReduce { (a, b) => var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a }
+  }
+
   private[graft] def l2normalize(v: Array[Double]): Array[Double] = {
     var s = 0.0; var i = 0
     while (i < v.length) { s += v(i) * v(i); i += 1 }
@@ -364,44 +391,4 @@ object SparseKMeans extends org.apache.spark.ml.util.DefaultParamsReadable[Spars
     if (nrm == 0.0) v
     else { val r = new Array[Double](v.length); i = 0; while (i < v.length) { r(i) = v(i) / nrm; i += 1 }; r }
   }
-}
-
-/** Per-cluster sum of sparse rows + count + weighted distortion with a
-  * dense d-wide buffer but O(nnz) adds per row — the sparse analogue of
-  * CentroidAggregator.
-  */
-class SparseCentroidAggregator(dim: Int)
-    extends org.apache.spark.sql.expressions.Aggregator[
-      (Seq[Int], Seq[Double], Double), (Array[Double], Double, Double), (Seq[Double], Double, Double)] {
-  import org.apache.spark.sql.{Encoder, Encoders}
-
-  override def zero: (Array[Double], Double, Double) = (new Array[Double](dim), 0.0, 0.0)
-
-  override def reduce(
-      b: (Array[Double], Double, Double),
-      a: (Seq[Int], Seq[Double], Double)): (Array[Double], Double, Double) = {
-    val (idx, vals, dist) = a
-    val s = b._1
-    var i = 0
-    while (i < idx.length) { s(idx(i)) += vals(i); i += 1 }
-    (s, b._2 + 1.0, b._3 + dist)
-  }
-
-  override def merge(
-      b1: (Array[Double], Double, Double),
-      b2: (Array[Double], Double, Double)): (Array[Double], Double, Double) = {
-    val s = b1._1
-    val t = b2._1
-    var i = 0
-    while (i < dim) { s(i) += t(i); i += 1 }
-    (s, b1._2 + b2._2, b1._3 + b2._3)
-  }
-
-  override def finish(r: (Array[Double], Double, Double)): (Seq[Double], Double, Double) =
-    (r._1.toSeq, r._2, r._3)
-
-  override def bufferEncoder: Encoder[(Array[Double], Double, Double)] =
-    Encoders.product[(Array[Double], Double, Double)]
-  override def outputEncoder: Encoder[(Seq[Double], Double, Double)] =
-    Encoders.product[(Seq[Double], Double, Double)]
 }

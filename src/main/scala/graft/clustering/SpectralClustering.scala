@@ -1,5 +1,6 @@
 package graft.clustering
 
+import graft.functions.CenterSums
 import graft.kernels.MercerKernel
 import org.apache.spark.ml.Estimator
 import org.apache.spark.ml.param._
@@ -146,22 +147,14 @@ class SpectralClustering(override val uid: String)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // one vector-sum job: s = sum_j phi_j  ->  degrees d_i = phi_i . s
-    val sumAgg = udaf(new CentroidAggregator(m))
-    val sRow = withPhi.agg(sumAgg(col("__phi"), lit(1.0), lit(0.0)).as("r"))
-      .select(col("r._1")).head()
-    val s = sRow.getSeq[Double](0).toArray
+    // (the one-slot center sums' first m entries)
+    val s = CenterSums.values(withPhi.agg(CenterSums.column(
+      col("__phi"), lit(0), lit(1.0), lit(0.0), CenterSums.Identity, 1, m))
+      .head(), 0).take(m)
 
     val lt = $(laplacianType).toLowerCase
     val normalizeByDegree = lt != "unnormalized"
-    val bcS = sc.broadcast(s)
-    val psiUdf = udf { (phi: Seq[Double]) =>
-      if (!normalizeByDegree) phi
-      else {
-        val d = { var t = 0.0; var i = 0; while (i < phi.length) { t += phi(i) * bcS.value(i); i += 1 }; t }
-        val scale = 1.0 / math.sqrt(math.max(d, 1e-12))
-        phi.map(_ * scale)
-      }
-    }
+    val psiUdf = SpectralNystrom.psiUdf(sc, s, normalizeByDegree)
     val withPsi = withPhi.withColumn("__psi", psiUdf(col("__phi")))
 
     // one treeAggregate: C = sum_i psi_i psi_i^T (m x m) — per-partition
@@ -170,7 +163,7 @@ class SpectralClustering(override val uid: String)
     val cov = withPsi.select(col("__psi")).rdd
       .treeAggregate(Array.ofDim[Double](m, m))(
         seqOp = (acc, row) => {
-          val p = row.getSeq[Double](0)
+          val p = row.getSeq[Double](0).toArray
           var i = 0
           while (i < m) {
             val pi = p(i)
@@ -290,13 +283,37 @@ object SpectralNystrom {
     }
   }
 
+  /** UDF degree-normalizing the feature map: psi = phi / sqrt(phi · s)
+    * with s the column sum of phi, or phi unchanged.
+    */
+  def psiUdf(
+      sc: org.apache.spark.SparkContext,
+      degreeSum: Array[Double],
+      normalize: Boolean): org.apache.spark.sql.expressions.UserDefinedFunction = {
+    val bcS = sc.broadcast(degreeSum)
+    udf { (phi: Seq[Double]) =>
+      val x = phi.toArray
+      if (normalize) {
+        val s = bcS.value
+        var d = 0.0
+        var i = 0
+        while (i < x.length) { d += x(i) * s(i); i += 1 }
+        val scale = 1.0 / math.sqrt(math.max(d, 1e-12))
+        i = 0
+        while (i < x.length) { x(i) *= scale; i += 1 }
+      }
+      x
+    }
+  }
+
   /** UDF projecting psi onto the spectral basis, optionally row-normalized. */
   def projectUdf(
       sc: org.apache.spark.SparkContext,
       proj: Array[Array[Double]],
       rowNormalize: Boolean): org.apache.spark.sql.expressions.UserDefinedFunction = {
     val bcP = sc.broadcast(proj)
-    udf { (psi: Seq[Double]) =>
+    udf { (psiSeq: Seq[Double]) =>
+      val psi = psiSeq.toArray
       val p = bcP.value
       val mm = p.length
       val kk = if (mm > 0) p(0).length else 0
@@ -400,16 +417,7 @@ class NystromSpectralModel(
     val (df, arrCol) = FeatureCols.asArray(df0, featuresColName)
     val sc = df.sparkSession.sparkContext
     val phiU = SpectralNystrom.embedUdf(sc, landmarks, whitener, kern)
-    val bcS = sc.broadcast(degreeSum)
-    val degNorm = degreeNormalized
-    val psiU = udf { (phi: Seq[Double]) =>
-      if (!degNorm) phi
-      else {
-        val d = { var t = 0.0; var i = 0; while (i < phi.length) { t += phi(i) * bcS.value(i); i += 1 }; t }
-        val scale = 1.0 / math.sqrt(math.max(d, 1e-12))
-        phi.map(_ * scale)
-      }
-    }
+    val psiU = SpectralNystrom.psiUdf(sc, degreeSum, degreeNormalized)
     val specU = SpectralNystrom.projectUdf(sc, projector, rowNormalized)
     val out = df.withColumn(outCol, specU(psiU(phiU(col(arrCol)))))
     if (arrCol != featuresColName) out.drop(arrCol) else out

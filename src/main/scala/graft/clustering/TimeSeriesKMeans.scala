@@ -1,5 +1,6 @@
 package graft.clustering
 
+import graft.functions.CenterSums
 import graft.kernels.{DTWKernel, SequenceKernel}
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
@@ -113,7 +114,8 @@ class TimeSeriesKMeans(override val uid: String)
 
       // one centroid-update round, distributed: each row emits per-index
       // (sum, count) vectors — DBA alignment sums, or the soft-DBA
-      // expectation sums — and one groupBy(cluster) agg merges them
+      // expectation sums — and one k-slot CenterSums aggregate merges
+      // them (slot c: len sums, len counts, rows, distortion)
       val alignUdf = udf { (xs: Seq[Double], cluster: Int) =>
         val x = xs.toArray
         val center = bcC.value(cluster)
@@ -132,33 +134,26 @@ class TimeSeriesKMeans(override val uid: String)
             (sums, counts)
         }
       }
-      val agg = assigned
+      val kk = centers.length
+      val width = 2 * len + 2
+      val agg = CenterSums.values(assigned
         .withColumn("__a", alignUdf(col(arrCol), col("cluster")))
-        .groupBy(col("cluster"))
-        .agg(
-          array((0 until len).map(i =>
-            sum(element_at(col("__a._1"), i + 1))): _*).as("sums"),
-          array((0 until len).map(i =>
-            sum(element_at(col("__a._2"), i + 1))): _*).as("counts"),
-          sum(col("dist")).as("dsum"),
-          count(lit(1)).as("n"))
-        .collect()
+        .agg(CenterSums.column(concat(col("__a._1"), col("__a._2")), col("cluster"), lit(1.0),
+          col("dist"), CenterSums.Identity, kk, 2 * len))
+        .head(), 0)
 
       var distortion = 0.0
-      val updated = scala.collection.mutable.Map[Int, Array[Double]]()
-      agg.foreach { r =>
-        val cid = r.getInt(0)
-        val sums = r.getSeq[Double](1)
-        val counts = r.getSeq[Double](2)
-        distortion += r.getDouble(3)
+      // same combine for both modes: DBA path sums or soft-expectation
+      // sums, normalized by their own mass; an empty cluster keeps its center
+      val next = Array.tabulate(kk) { cid =>
+        val base = cid * width
+        distortion += agg(base + 2 * len + 1)
         val c = centers(cid)
-        // same combine for both modes: DBA path sums or soft-expectation
-        // sums, normalized by their own mass
-        updated(cid) = Array.tabulate(len)(i =>
-          if (counts(i) > 0) sums(i) / counts(i) else c(i))
+        if (agg(base + 2 * len) <= 0) c
+        else Array.tabulate(len)(i =>
+          if (agg(base + len + i) > 0) agg(base + i) / agg(base + len + i) else c(i))
       }
       distHist += distortion
-      val next = centers.indices.map(i => updated.getOrElse(i, centers(i))).toArray
       val movement = centers.zip(next).map { case (a, b) =>
         math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)
       }.max

@@ -214,7 +214,7 @@ object Classify {
           val resid = joined.join(wDf, Seq("bucket"), "left")
             .groupBy(col("doc_id"))
             .agg(sum(col("x") * coalesce(col("__w"), lit(0.0))).as("__m"),
-              first(col("y")).as("y"))
+              max(col("y")).as("y"))
             .select(col("doc_id"),
               (lit(1.0) / (lit(1.0) + exp(-col("__m"))) - col("y")).as("r"))
           // broadcast the per-doc residuals back onto the cached feature
@@ -277,7 +277,7 @@ object Classify {
     val pivoted = feats.join(ydf, "doc_id")
       .groupBy(col("doc_id"))
       .agg(collect_list(struct(col("bucket"), col("x"))).as("fs"),
-        first(col("y")).as("y"))
+        max(col("y")).as("y"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = pivoted.count()

@@ -206,9 +206,10 @@ object Pca {
     val spark = df.sparkSession
     val bc = spark.sparkContext.broadcast(model)
     val k = model.components.length
-    val projUdf = udf { (xs: Seq[Double]) =>
-      if (xs == null) null
+    val projUdf = udf { (xsSeq: Seq[Double]) =>
+      if (xsSeq == null) null
       else {
+        val xs = xsSeq.toArray
         val m = bc.value
         val d = m.mean.length
         require(xs.length == d, s"pca.project: expected $d dims, got ${xs.length}")

@@ -49,7 +49,8 @@ object Prototypes {
     val spark = df.sparkSession
     val bc = spark.sparkContext.broadcast(centroids)
     val dim = centroids(0).length
-    val cellUdf = udf { (xs: Seq[Double]) =>
+    val cellUdf = udf { (xsSeq: Seq[Double]) =>
+      val xs = xsSeq.toArray
       require(xs.length == dim,
         s"prototypicality: expected $dim-dim vectors, got ${xs.length}")
       val cs = bc.value

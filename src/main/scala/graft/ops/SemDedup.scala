@@ -112,13 +112,8 @@ object SemDedup {
         // every candidate key is NULL -> nulls-first, lowest cluster
         Some((0L, Option.empty[Double]))
       } else {
-        val x = new Array[Double](v.length)
-        var p = 0
-        while (p < x.length) {
-          val e = v(p)
-          x(p) = if (e eq null) 0.0 else e.doubleValue
-          p += 1
-        }
+        // one pass over the (List-backed, rule 16) input: no v(p) walk
+        val x = v.iterator.map(e => if (e eq null) 0.0 else e.doubleValue).toArray
         // real keys: 1 - sim with NaN ordered last, ties -> lowest cluster
         def betterKey(a: Double, b: Double): Boolean = {
           if (java.lang.Double.isNaN(b)) !java.lang.Double.isNaN(a)

@@ -59,9 +59,10 @@ object Similarity {
     // null embeddings PROPAGATE (null in -> null proj), matching the
     // pure-expression ops (quantizeInt8 etc.) — not an opaque NPE inside
     // codegen from an unconditional dereference
-    val projUdf = udf { (xs: Seq[Double]) =>
-      if (xs == null) null
+    val projUdf = udf { (xsSeq: Seq[Double]) =>
+      if (xsSeq == null) null
       else {
+      val xs = xsSeq.toArray
       require(xs.length == inDim,
         s"randomProject: expected $inDim dims, got ${xs.length}")
       val out = new Array[Double](outDim)
@@ -117,7 +118,8 @@ object Similarity {
   /** L2-normalize UDF — one pass, used to pre-normalize a corpus once so
     * every later cosine is a single dot product.
     */
-  val normalizeUdf: UserDefinedFunction = udf { (xs: Seq[Double]) =>
+  val normalizeUdf: UserDefinedFunction = udf { (xsSeq: Seq[Double]) =>
+    val xs = xsSeq.toArray
     val n = xs.length
     var s = 0.0
     var i = 0
@@ -133,7 +135,9 @@ object Similarity {
     * traversals with per-element closure dispatch; one while-loop closure
     * is the scale-correct shape for millions of candidate pairs).
     */
-  val dotUdf: UserDefinedFunction = udf { (a: Seq[Double], b: Seq[Double]) =>
+  val dotUdf: UserDefinedFunction = udf { (aSeq: Seq[Double], bSeq: Seq[Double]) =>
+    val a = aSeq.toArray
+    val b = bSeq.toArray
     var s = 0.0
     var i = 0
     val n = a.length
@@ -204,7 +208,8 @@ object Similarity {
     */
   def hyperplaneTableKeysUdf(numTables: Int, planesPerTable: Int, seed: Long) = {
     val total = numTables * planesPerTable
-    udf { (vec: Seq[Double]) =>
+    udf { (vecSeq: Seq[Double]) =>
+      val vec = vecSeq.toArray
       val d = vec.length
       val m = planes(seed, total, d)
       val proj = new Array[Double](total)

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * (reference: ml/StreamingKMeans.scala:173-206 estimator, :283-430 update
   * rule and dying-cluster split. The reference aggregates each micro-batch
   * with rdd.groupByKey + collect — ml/StreamingKMeans.scala:302-345; here
-  * the per-cluster batch statistics come from the shared tiered
-  * Update.gradMean aggregation: map-side combine, k rows collected.)
+  * the per-cluster batch statistics come from the shared
+  * Update.gradMean aggregation: map-side combine, one k-slot buffer
+  * collected.)
   *
   * Update rule per batch (mini-batch):
   *   n_i <- n_i * discount            (discount = decay^1 for "batches",
@@ -114,7 +115,7 @@ class StreamingKMeansModel(
     val dim = centers.headOption.map(_.length).getOrElse(0)
 
     val assigned = Assignment.assign(df, arrCol, kern, centers, getAssignmentStrategy, oneShot = false)
-    val upd = Update.gradMean(assigned, arrCol, lit(1.0), kern, dim)
+    val upd = Update.gradMean(assigned, arrCol, lit(1.0), kern, dim, centers.length)
     val batchTotal = upd.weights.values.sum
 
     val discount = timeUnit match {

@@ -192,6 +192,31 @@ class ClassifySpec extends SparkSpec {
     } finally spark.conf.unset("graft.logreg.pivotMaxBuckets")
   }
 
+  test("logisticFit resolves a doc's conflicting labels to their max, on both paths " +
+    "and in any input order") {
+    // docs 0..19 each arrive twice with labels 0 and 1 — even docs with
+    // the 0 row first, odd docs with the 1 row first — so a pick-first
+    // policy takes label 0 for some doc whatever order the plan keeps
+    val texts = Seq("apple banana cherry", "wolf bear lynx", "apple wolf fig", "bear fig kiwi")
+    val rows = (0 until 20).flatMap { d =>
+      val text = texts(d % texts.size) + s" w$d"
+      val pair = Seq((d.toLong, text, 0.0), (d.toLong, text, 1.0))
+      if (d % 2 == 0) pair else pair.reverse
+    } :+ ((20L, "kiwi lynx", 0.0))
+    val conflicting = rows.toDF("doc_id", "text", "y").coalesce(1)
+    // the same rows with every conflict already resolved to max = 1.0
+    val resolved = conflicting.withColumn("y",
+      when(col("doc_id") < 20L, lit(1.0)).otherwise(col("y")))
+    def fit(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+      Classify.logisticFit(df, "doc_id", "text", "y", buckets = 16, iters = 3, lr = 0.5)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    def check(): Unit = assert(fit(conflicting) == fit(resolved))
+    check() // pivoted path
+    spark.conf.set("graft.logreg.pivotMaxBuckets", "1")
+    try check() // row-per-bucket join path
+    finally spark.conf.unset("graft.logreg.pivotMaxBuckets")
+  }
+
   test("LogregResidual expression equals the boxed-UDF formulation " +
     "bit-for-bit, incl. empty feature arrays and null y") {
     // r20: the pivoted GD residual moved from a Scala UDF over

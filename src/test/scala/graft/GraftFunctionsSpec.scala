@@ -40,6 +40,17 @@ class GraftFunctionsSpec extends SparkSpec {
     }
   }
 
+  test("rule 16 guard: a Seq[Double] UDF parameter arrives as a List") {
+    import spark.implicits._
+    // CLAUDE.md rule 16: Spark hands Seq UDF/Aggregator inputs over as a
+    // List, so xs(i) walks i cells. If this fails, a Spark upgrade changed
+    // the input conversion: re-read rule 16 before relying on either shape.
+    val cls = udf { (xs: Seq[Double]) => xs.getClass.getName }
+    val got = Seq(Seq(1.0, 2.0, 3.0)).toDF("a").select(cls(col("a"))).head().getString(0)
+    assert(got == classOf[scala.collection.immutable.::[_]].getName,
+      s"Seq UDF input is now $got, not a List: revisit CLAUDE.md rule 16")
+  }
+
   test("interpreted path (codegen off) agrees with codegen path") {
     import spark.implicits._
     val df = randRows(30, 8, 2).toDF("a", "b")

@@ -4,12 +4,39 @@ import graft.clustering._
 import graft.kernels._
 import org.apache.spark.sql.functions._
 
-/** Center-update machinery: typed aggregator (constant-size plan at any
-  * dimension), exact weighted median, empty-cluster reseed.
+/** Center-update machinery: the native CenterSums aggregate
+  * (constant-size plan at any dimension), exact weighted median,
+  * empty-cluster reseed.
   */
 class LloydsUpdateSpec extends SparkSpec {
 
-  test("CentroidAggregator gradMean equals hand-computed weighted mean + distortion") {
+  /** n seeded points of dim d with their assignment to `centers` (the
+    * first k points). Points lie on the simplex, where KL is a true
+    * divergence, so every center keeps at least itself.
+    */
+  private def assignedFixture(n: Int, d: Int, k: Int, kernel: BregmanKernel, seed: Int) = {
+    import spark.implicits._
+    val rnd = new java.util.Random(seed)
+    val pts = Array.fill(n) {
+      val x = Array.fill(d)(rnd.nextDouble() + 0.01)
+      val s = x.sum
+      x.map(_ / s)
+    }
+    val centers = pts.take(k).map(_.clone())
+    val assigned = Assignment.assign(pts.map(_.toSeq).toSeq.toDF("features"), "features",
+      kernel, centers, "broadcast", oneShot = false)
+    (pts, centers, assigned)
+  }
+
+  private def relErr(a: Array[Double], b: Array[Double]): Double = {
+    val diff = math.sqrt(a.indices.map(i => math.pow(a(i) - b(i), 2)).sum)
+    diff / math.max(1e-300, math.sqrt(b.map(v => v * v).sum))
+  }
+
+  private def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+
+  test("CenterSums gradMean equals hand-computed weighted mean + distortion") {
     import spark.implicits._
     val df = Seq(
       (Seq(1.0, 2.0), 1.0, 0, 0.5),
@@ -82,5 +109,76 @@ class LloydsUpdateSpec extends SparkSpec {
     val m2 = new GeneralizedKMeans().setK(3).setSeed(1).setMaxIter(5)
       .setEmptyClusterStrategy("drop").fit(df)
     assert(m2.numClusters <= 3)
+  }
+
+  test("CenterSums equals LocalLloyds' gradient mean (SE and KL, d = 2, 32, 129, 1024)") {
+    for (kernel <- Seq(new SquaredEuclideanKernel, new KLDivergenceKernel()); d <- Seq(2, 32, 129, 1024)) {
+      val k = 3
+      val (pts, centers, assigned) = assignedFixture(60, d, k, kernel, d)
+      // one LocalLloyds iteration from the same centers = assign + gradient mean
+      val local = LocalLloyds.run(pts, Array.fill(pts.length)(1.0), k, kernel, 1, 0.0, 1L,
+        Some(centers))
+      val res = Update.gradMean(assigned, "features", lit(1.0), kernel, d, k)
+      assert(res.centers.size == local.length, s"${kernel.name} d=$d")
+      (0 until k).foreach { c =>
+        val err = relErr(res.centers(c), local(c))
+        assert(err < 1e-9, s"${kernel.name} d=$d cluster $c: relative error $err")
+      }
+    }
+  }
+
+  test("a row with a null weight or null features adds nothing") {
+    import spark.implicits._
+    val df = Seq[(Option[Seq[Double]], Option[Double], Int, Double)](
+      (Some(Seq(1.0, 2.0)), Some(1.0), 0, 0.5),
+      (Some(Seq(100.0, 100.0)), None, 0, 9.0),
+      (None, Some(5.0), 0, 9.0),
+      (Some(Seq(3.0, 4.0)), Some(1.0), 0, 1.5)
+    ).toDF("features", "w", "cluster", "dist")
+    for (res <- Seq(Update.gradMean(df, "features", col("w"), new SquaredEuclideanKernel, 2, 1),
+        Update.gradMean(df, "features", col("w"), new SquaredEuclideanKernel, 2))) {
+      assert(res.centers(0).toSeq == Seq(2.0, 3.0))
+      assert(res.weights(0) == 2.0)
+      assert(math.abs(res.distortion - 2.0) < 1e-12)
+    }
+  }
+
+  test("a zero-weight cluster is absent from centers") {
+    import spark.implicits._
+    val df = Seq(
+      (Seq(1.0, 2.0), 1.0, 0, 0.5),
+      (Seq(7.0, 7.0), 0.0, 1, 3.0),
+      (Seq(5.0, 6.0), 2.0, 2, 1.0)
+    ).toDF("features", "w", "cluster", "dist")
+    val res = Update.gradMean(df, "features", col("w"), new SquaredEuclideanKernel, 2, 4)
+    assert(res.centers.keySet == Set(0, 2))
+    assert(res.weights.keySet == Set(0, 2))
+    assert(res.centers(2).toSeq == Seq(5.0, 6.0))
+  }
+
+  test("an out-of-range cluster id raises GKMException") {
+    import spark.implicits._
+    val df = Seq((Seq(1.0, 2.0), 0, 0.5), (Seq(3.0, 4.0), 2, 0.5))
+      .toDF("features", "cluster", "dist")
+    val e = intercept[Exception] {
+      Update.gradMean(df, "features", lit(1.0), new SquaredEuclideanKernel, 2, 2)
+    }
+    val typed = causes(e).collectFirst { case g: GKMException => g }
+    assert(typed.exists(_.error == GKMError.ClusterIdOutOfRange("2", 2)), causes(e).mkString("\n"))
+  }
+
+  test("the grouped one-slot form matches the ungrouped form") {
+    for (kernel <- Seq(new SquaredEuclideanKernel, new KLDivergenceKernel())) {
+      val (_, _, assigned) = assignedFixture(200, 16, 5, kernel, 7)
+      val w = (col("dist") * 0 + 1.5)
+      val dense = Update.gradMean(assigned, "features", w, kernel, 16, 5)
+      val grouped = Update.gradMean(assigned, "features", w, kernel, 16)
+      assert(dense.centers.keySet == grouped.centers.keySet)
+      dense.centers.foreach { case (c, v) =>
+        assert(relErr(v, grouped.centers(c)) < 1e-12, s"${kernel.name} cluster $c")
+        assert(math.abs(dense.weights(c) - grouped.weights(c)) < 1e-9)
+      }
+      assert(math.abs(dense.distortion - grouped.distortion) <= 1e-9 * math.abs(dense.distortion))
+    }
   }
 }

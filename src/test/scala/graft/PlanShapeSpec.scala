@@ -27,6 +27,28 @@ class PlanShapeSpec extends SparkSpec {
       s"transform must not shuffle; plan:\n${plan.take(1500)}")
   }
 
+  test("Lloyd update is one native aggregate: no ScalaUDF, no ScalaAggregator, " +
+    "one non-broadcast Exchange") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.aggregate.ScalaAggregator
+    val emb = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
+    val assigned = emb.select(col("embedding").as("features"),
+      (col("vec_id") % 4).cast("int").as("cluster"), lit(0.5).as("dist"))
+    // KL: a gradient kernel, where the former update added a grad UDF
+    val sums = graft.clustering.Update.sumsFrame(assigned, "features", lit(1.0),
+      new graft.kernels.KLDivergenceKernel(), 64, 4)
+    val plan = sums.queryExecution.executedPlan
+    // the helper descends into the adaptive plan's current physical plan
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val exprs = helper.collect(plan) { case p => p.expressions }.flatten
+      .flatMap(_.collect { case e => e })
+    assert(exprs.exists(_.isInstanceOf[graft.functions.CenterSums]), s"no CenterSums:\n$plan")
+    assert(!exprs.exists(_.isInstanceOf[ScalaUDF]), s"ScalaUDF in update plan:\n$plan")
+    assert(!exprs.exists(_.isInstanceOf[ScalaAggregator[_, _, _]]), s"ScalaAggregator in update plan:\n$plan")
+    assert(exchanges(plan.toString) == 1, s"expected one Exchange; plan:\n$plan")
+    assert(sums.collect().length == 1)
+  }
+
   test("brute-force top-k plans a map-side WindowGroupLimit before the shuffle") {
     val emb = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").as("v"))
