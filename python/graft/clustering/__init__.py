@@ -84,7 +84,7 @@ class _GeneralizedKMeansParams(
     assignmentStrategy = Param(
         Params._dummy(),
         "assignmentStrategy",
-        "auto|broadcast|expression|elkan|hamerly",
+        "auto|broadcast|chunked|expression|crossjoin|elkan|hamerly",
         typeConverter=TypeConverters.toString,
     )
     emptyClusterStrategy = Param(

@@ -3025,25 +3025,10 @@ object SparkEntry {
     // cross-iteration bound maintenance must be LOSSLESS, i.e. produce the
     // identical centers/sizes as the exhaustive loop and the SQL unroll.
     "q_kmeans_fit_elkan" -> ((s, dir) => lloydFitQuery(s, dir, "elkan", "squaredEuclidean", 5)),
-    // Same oracle a third time, through the memory-bounded CHUNKED
-    // broadcast tier with the chunk budget forced down to 256 elems
-    // (4-center chunks at d=64 → the k=8 warm start splits into TWO
-    // chunks, so the multi-chunk `least` struct fold actually executes in
-    // every assignment of every iteration). This was the one hot-path
-    // assignment tier no gate query drove — a regression in the chunk
-    // fold previously shipped green. Reference analogue:
-    // impl/ChunkedBroadcastAssignment.scala:22-120.
-    "q_kmeans_fit_chunked" -> { (s, dir) =>
-      // restore (not unset) any pre-existing override: the conf is a
-      // documented user escape hatch in shared sessions
-      val prior = s.conf.getOption("graft.assign.chunkElems")
-      s.conf.set("graft.assign.chunkElems", "256")
-      try lloydFitQuery(s, dir, "chunked", "squaredEuclidean", 5)
-      finally prior match {
-        case Some(v) => s.conf.set("graft.assign.chunkElems", v)
-        case None => s.conf.unset("graft.assign.chunkElems")
-      }
-    },
+    // Same oracle a third time, through the `chunked` strategy name: a
+    // former assignment tier, now an alias of the one NearestCenter path
+    // that persisted models and user code still set.
+    "q_kmeans_fit_chunked" -> ((s, dir) => lloydFitQuery(s, dir, "chunked", "squaredEuclidean", 5)),
     // Full K-medians fit: L1 assignment + exact weighted-median update,
     // 5 unrolled iterations. Medians are actual data values, so the
     // inter-iteration centers are bit-identical between engines — the

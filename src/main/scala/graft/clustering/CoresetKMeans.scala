@@ -135,7 +135,7 @@ class CoresetKMeans(override val uid: String)
     // core-set centers (reference: ml/CoresetKMeans.scala refineOnFullData)
     var refined = 0
     while (usedCoreset && refined < $(refinementIterations)) {
-      val assigned = Assignment.assign(data, arrCol, kern, centers, $(assignmentStrategy), oneShot = false)
+      val assigned = Assignment.assign(data, arrCol, kern, centers, $(assignmentStrategy))
       val upd = Update.gradMean(assigned, arrCol, lit(1.0), kern, dim, centers.length)
       val next = centers.indices.flatMap(upd.centers.get).toArray
       if (next.length == centers.length) centers = next

@@ -65,7 +65,7 @@ class DPMeans(override val uid: String)
     val distHist = Seq.newBuilder[Double]
 
     while (iter < $(maxIter) && !converged) {
-      val assigned = Assignment.assign(data, arrCol, kern, centers, $(assignmentStrategy), oneShot = false)
+      val assigned = Assignment.assign(data, arrCol, kern, centers, $(assignmentStrategy))
       val canGrow = $(maxK) == 0 || centers.length < $(maxK)
       val outlier =
         if (canGrow)

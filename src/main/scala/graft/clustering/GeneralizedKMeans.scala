@@ -37,9 +37,12 @@ trait GeneralizedKMeansParams extends Params with HasFeaturesCol with HasPredict
   def getInitSteps: Int = $(initSteps)
 
   final val assignmentStrategy = new Param[String](this, "assignmentStrategy",
-    "auto|broadcast|chunked|expression|elkan|hamerly (chunked: centers " +
-      "broadcast in memory-bounded chunks; elkan: SE only, per-center " +
-      "triangle-inequality bounds; hamerly: SE only, single lower bound)")
+    "auto|broadcast|chunked|expression|crossjoin|elkan|hamerly (auto: one " +
+      "native nearest-center projection over broadcast centers; broadcast, " +
+      "chunked, expression and crossjoin are aliases of auto; elkan: SE " +
+      "only, per-center triangle-inequality bounds; hamerly: SE only, " +
+      "single lower bound)",
+    ParamValidators.inArray(Assignment.Strategies.toArray))
   def getAssignmentStrategy: String = $(assignmentStrategy)
 
   final val emptyClusterStrategy = new Param[String](this, "emptyClusterStrategy",

@@ -216,7 +216,10 @@ object InterchangeV1 {
     iOpt("maxIter").foreach(v => model.set(model.maxIter, v))
     dOpt("tol").foreach(v => model.set(model.tol, v))
     lOpt("seed").foreach(v => model.set(model.seed, v))
-    sOpt("assignmentStrategy").foreach(v => model.set(model.assignmentStrategy, v))
+    // a reference spelling (`crossJoin`) maps onto ours; a name we lack ran
+    // `auto` before names were validated, and still does
+    sOpt("assignmentStrategy").foreach(v => model.set(model.assignmentStrategy,
+      Assignment.Strategies.find(_.equalsIgnoreCase(v)).getOrElse("auto")))
     sOpt("emptyClusterStrategy").foreach(v => model.set(model.emptyClusterStrategy, v))
     iOpt("checkpointInterval").foreach(v => model.set(model.checkpointInterval, v))
     sOpt("initMode").foreach(v => model.set(model.initMode, v))

@@ -1,8 +1,7 @@
 package graft.clustering
 
-import graft.functions.CenterSums
+import graft.functions.{CenterSums, NearestCenter}
 import graft.kernels._
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,7 +21,7 @@ case class LloydsConfig(
     seed: Long = 42L,
     initMode: String = "k-means||", // or "random"
     initSteps: Int = 2,
-    assignmentStrategy: String = "auto", // auto | broadcast | expression
+    assignmentStrategy: String = "auto", // auto|broadcast|chunked|expression|crossjoin|elkan|hamerly
     emptyClusterStrategy: String = "reseedRandom", // or "drop"
     // Lineage-truncation cadence. The core loop itself has FLAT lineage
     // (every iteration re-derives one projection + one aggregation from the
@@ -63,85 +62,30 @@ case class LloydsResult(
     // under cache-eviction recomputation.
     boundSkipRate: Option[Double] = None)
 
-/** Assignment: append a `cluster` (argmin-divergence index) and `dist`
-  * (min divergence) column for a broadcast set of centers.
+/** Assignment: append a `cluster` (argmin-divergence index, ties to the
+  * lowest) and `dist` (min divergence) column for a set of centers.
   *
-  * Two physical strategies:
-  *  - expression: for kernels with a pure-Catalyst distance and modest k*d,
-  *    build array(struct(dist_i, i)) and take array_min — struct ordering
-  *    compares dist first then index, which reproduces the reference's
-  *    first-min tie-break (reference: df/strategies/impl/
-  *    BroadcastUDFAssignment.scala:74-90) entirely inside codegen.
-  *  - broadcast closure: a scala UDF looping over a Broadcast'd k x d array;
-  *    O(n*k*d) with no shuffle (reference: BroadcastUDFAssignment.scala:31-93).
+  * Two paths: Elkan/Hamerly bound pruning (squared Euclidean, `elkan` or
+  * `hamerly`), and for everything else one native
+  * [[graft.functions.NearestCenter]] projection over broadcast centers —
+  * O(n·k·d), no shuffle (reference: df/strategies/impl/
+  * BroadcastUDFAssignment.scala:31-93).
   */
 object Assignment {
 
-  /** Max k*d for the expression path. Above this the generated expression
-    * falls out of WholeStageCodegen (observed at k=10 x d=64 already) and
-    * the broadcast-closure path wins.
+  /** Every accepted `assignmentStrategy` name. `broadcast`, `chunked`,
+    * `expression` and `crossjoin` name former physical tiers and are
+    * aliases of `auto` (persisted models carry them).
     */
-  val ExpressionMaxElems = 512
+  val Strategies: Seq[String] =
+    Seq("auto", "broadcast", "chunked", "expression", "crossjoin", "elkan", "hamerly")
 
-  /** Max k*d elements for ONE broadcast. Above this the centers are
-    * broadcast in chunks so no single broadcast (or its per-task
-    * deserialized copy) exceeds ~128 MB of doubles.
-    * (reference: impl/ChunkedBroadcastAssignment.scala:22-120 chunks by a
-    * fixed 100 centers; sizing by elements adapts to d.)
-    */
-  val ChunkMaxElems: Long = 16L * 1024 * 1024
-
-  /** Executor-memory-probed chunk budget: at most 1/16 of the configured
-    * executor heap per chunk of broadcast centers, capped by
-    * [[ChunkMaxElems]] (reference: impl/AdaptiveBroadcastAssignment.scala
-    * picks chunk size from an executor memory estimate).
-    * `graft.assign.chunkElems` overrides the probe outright — the knob the
-    * chunked-tier gate query uses to force a multi-chunk fold at test-scale
-    * k*d, and an operator escape hatch when the heap probe misjudges an
-    * exotic deployment.
+  /** The plan reads a private copy of `centers` (local-mode broadcast is
+    * by reference — CLAUDE.md rule 14), so a caller may mutate its array
+    * (an in-place center merge) without changing what a re-execution of
+    * the returned frame computes.
     *
-    * SESSION-SCOPED, read at plan-build time of every assignment: a forced
-    * override set mid-flight leaks into any OTHER fit planning concurrently
-    * in the same session. Safe under sequential use (Verify/Bench, a single
-    * notebook); a shared multi-tenant session should set it once up front,
-    * or save/restore around the fit the way q_kmeans_fit_chunked does
-    * (restore-not-unset, so a pre-existing user override survives).
-    */
-  def chunkElemsBudget(spark: org.apache.spark.sql.SparkSession): Long = {
-    val forced = graft.util.Conf.long(spark, "graft.assign.chunkElems", -1L)
-    if (forced > 0) forced
-    else chunkElemsBudgetOf(parseMemory(
-      spark.conf.getOption("spark.executor.memory").getOrElse("4g")))
-  }
-
-  /** Pure sizing rule: 1/16 of the heap as doubles, floored at 1M elems,
-    * capped at [[ChunkMaxElems]] — separated out so specs can pin the
-    * chunk count a given executor size produces.
-    */
-  private[graft] def chunkElemsBudgetOf(heapBytes: Long): Long =
-    math.min(ChunkMaxElems, math.max(1L << 20, heapBytes / 8 / 16))
-
-  private[graft] def parseMemory(s: String): Long = {
-    val t = s.trim.toLowerCase
-    val (num, mult) =
-      if (t.endsWith("k")) (t.dropRight(1), 1L << 10)
-      else if (t.endsWith("m")) (t.dropRight(1), 1L << 20)
-      else if (t.endsWith("g")) (t.dropRight(1), 1L << 30)
-      else if (t.endsWith("t")) (t.dropRight(1), 1L << 40)
-      else (t, 1L)
-    (num.toDouble * mult).toLong
-  }
-
-  /** @param oneShot whether this assignment runs ONCE over the data
-    *   (model.transform, metrics) rather than inside an iterative fit
-    *   loop. The literal-expression tier embeds the center values in the
-    *   plan, so each loop iteration would produce a NEW plan and pay a
-    *   whole-stage-codegen (Janino) compile — ~100-300ms of driver time
-    *   per iteration that the broadcast tier amortizes to one compile for
-    *   the whole loop (broadcast values change, the plan does not). Auto
-    *   therefore only picks the expression tier for one-shot scans, where
-    *   the single compile is amortized over the full read and the
-    *   codegen'd distance math wins.
+    * @param oneShot unused: every strategy plans the same projection.
     */
   def assign(
       df: DataFrame,
@@ -151,163 +95,15 @@ object Assignment {
       strategy: String = "auto",
       clusterCol: String = "cluster",
       distCol: String = "dist",
-      oneShot: Boolean = true): DataFrame = {
+      @deprecated("unused", "0.1.0") oneShot: Boolean = true): DataFrame = {
+    val cs = centers.map(_.clone)
     if ((strategy == "elkan" || strategy == "hamerly") &&
         kernel.isInstanceOf[SquaredEuclideanKernel])
-      return ElkanAssignment.assign(df, featuresCol, centers, clusterCol, distCol)
-    if (strategy == "crossjoin")
-      return assignCrossJoin(df, featuresCol, kernel, centers, clusterCol, distCol)
-    val dim = centers.headOption.map(_.length).getOrElse(0)
-    val elems = centers.length.toLong * dim
-    val useExpr = strategy match {
-      case "expression" => true
-      case "broadcast" | "chunked" => false
-      case _ => oneShot && kernel.supportsExpressionOptimization && elems <= ExpressionMaxElems
-    }
-    if (useExpr && centers.forall(c => kernel.distExpr(col(featuresCol), c).isDefined))
-      assignExpr(df, featuresCol, kernel, centers, clusterCol, distCol)
-    else {
-      // memory-adaptive: both the DECISION to chunk and the chunk size
-      // derive from the executor heap (a 512m executor starts chunking
-      // at k*d the 4g default would broadcast whole) — reference:
-      // impl/AdaptiveBroadcastAssignment.scala sizes from executor memory
-      val budget = chunkElemsBudget(df.sparkSession)
-      if (strategy == "chunked" || (strategy != "broadcast" && elems > budget)) {
-        val perChunk = math.max(1, (budget / math.max(1, dim)).toInt)
-        assignChunked(df, featuresCol, kernel, centers, perChunk, clusterCol, distCol)
-      } else assignBroadcast(df, featuresCol, kernel, centers, clusterCol, distCol)
-    }
-  }
-
-  /** Memory-bounded tier: centers broadcast in chunks of `perChunk`; each
-    * chunk contributes a (dist, cluster) struct column and `least` folds
-    * them — struct ordering compares dist first then cluster id, which
-    * preserves the global first-min tie-break. One projection, no extra
-    * scans; peak broadcast memory is one chunk.
-    */
-  def assignChunked(
-      df: DataFrame,
-      featuresCol: String,
-      kernel: BregmanKernel,
-      centers: Array[Array[Double]],
-      perChunk: Int,
-      clusterCol: String = "cluster",
-      distCol: String = "dist"): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val bk = sc.broadcast(kernel)
-    val chunkCols: Seq[Column] = centers.grouped(perChunk).zipWithIndex.map {
-      case (chunk, ci) =>
-        val offset = ci * perChunk
-        val bc = sc.broadcast(chunk)
-        val u = udf { (xs: Seq[Double]) =>
-          val x = xs.toArray
-          val cs = bc.value
-          var bestI = 0
-          var bestD = Double.MaxValue
-          var i = 0
-          while (i < cs.length) {
-            val d = bk.value.divergence(x, cs(i))
-            if (d < bestD) { bestD = d; bestI = i }
-            i += 1
-          }
-          (bestD, offset + bestI)
-        }
-        u(col(featuresCol))
-    }.toSeq
+      return ElkanAssignment.assign(df, featuresCol, cs, clusterCol, distCol)
     val tmp = s"__${clusterCol}_best"
-    val combined = if (chunkCols.size == 1) chunkCols.head else least(chunkCols: _*)
-    df.withColumn(tmp, combined)
-      .withColumn(clusterCol, col(s"$tmp._2"))
-      .withColumn(distCol, col(s"$tmp._1"))
-      .drop(tmp)
-  }
-
-  /** Join-based assignment: broadcast-hash-join the k-row centers frame
-    * against the data, then a `min_by` hash aggregate picks each row's
-    * best center (reference: df/strategies/impl/SECrossJoinAssignment
-    * .scala:17-74 — the reference sorts a Window over ALL input columns +
-    * row_number; min_by makes it a hash-agg top-1, no sort). The struct
-    * (dist, cid) ordering keeps the lowest-index tie-break identical to
-    * the broadcast path. All original columns ride through the
-    * aggregation via first().
-    */
-  def assignCrossJoin(
-      df: DataFrame,
-      featuresCol: String,
-      kernel: BregmanKernel,
-      centers: Array[Array[Double]],
-      clusterCol: String = "cluster",
-      distCol: String = "dist"): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val bk = sc.broadcast(kernel)
-    val rowId = s"__${clusterCol}_rid"
-    val withId = df.withColumn(rowId, monotonically_increasing_id())
-    val centersDf = broadcast(
-      centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("__cid", "__cv"))
-    val distUdf = udf { (xs: Seq[Double], cv: Seq[Double]) =>
-      bk.value.divergence(xs.toArray, cv.toArray)
-    }
-    val joined = withId.crossJoin(centersDf)
-      .withColumn("__cd", distUdf(col(featuresCol), col("__cv")))
-    val originals = df.columns
-    val aggs =
-      originals.map(c => first(col(c)).as(c)) :+
-        min_by(struct(col("__cid"), col("__cd")), struct(col("__cd"), col("__cid"))).as("__best")
-    joined.groupBy(col(rowId)).agg(aggs.head, aggs.tail: _*)
-      .withColumn(clusterCol, col("__best.__cid"))
-      .withColumn(distCol, col("__best.__cd"))
-      .drop(rowId, "__best")
-  }
-
-  def assignExpr(
-      df: DataFrame,
-      featuresCol: String,
-      kernel: BregmanKernel,
-      centers: Array[Array[Double]],
-      clusterCol: String = "cluster",
-      distCol: String = "dist"): DataFrame = {
-    val f = col(featuresCol)
-    val candidates = array(centers.zipWithIndex.map { case (c, i) =>
-      struct(kernel.distExpr(f, c).get.as("dist"), lit(i).as("cluster"))
-    }.toIndexedSeq: _*)
-    val tmp = s"__${clusterCol}_best"
-    val best = array_min(candidates)
-    df.withColumn(tmp, best)
+    df.withColumn(tmp, NearestCenter.column(col(featuresCol), cs, kernel))
       .withColumn(clusterCol, col(s"$tmp.cluster"))
       .withColumn(distCol, col(s"$tmp.dist"))
-      .drop(tmp)
-  }
-
-  def assignBroadcast(
-      df: DataFrame,
-      featuresCol: String,
-      kernel: BregmanKernel,
-      centers: Array[Array[Double]],
-      clusterCol: String = "cluster",
-      distCol: String = "dist"): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val bc: Broadcast[Array[Array[Double]]] = sc.broadcast(centers)
-    val bk = sc.broadcast(kernel)
-    val assignUdf = udf { (xs: Seq[Double]) =>
-      val x = xs.toArray
-      val cs = bc.value
-      val kern = bk.value
-      var bestI = 0
-      var bestD = Double.MaxValue
-      var i = 0
-      while (i < cs.length) {
-        val d = kern.divergence(x, cs(i))
-        if (d < bestD) { bestD = d; bestI = i }
-        i += 1
-      }
-      (bestI, bestD)
-    }
-    val tmp = s"__${clusterCol}_best"
-    df.withColumn(tmp, assignUdf(col(featuresCol)))
-      .withColumn(clusterCol, col(s"$tmp._1"))
-      .withColumn(distCol, col(s"$tmp._2"))
       .drop(tmp)
   }
 }
@@ -487,7 +283,7 @@ object LloydsIterator {
 
     while (iter < cfg.maxIter && !converged) {
       cfg.sink.emit(TrainingEvent.IterationStarted(iter))
-      val assigned = Assignment.assign(data, cfg.featuresCol, cfg.kernel, centers, cfg.assignmentStrategy, oneShot = false)
+      val assigned = Assignment.assign(data, cfg.featuresCol, cfg.kernel, centers, cfg.assignmentStrategy)
       val upd =
         if (isMedian) Update.median(assigned, cfg.featuresCol, wCol, dim)
         else Update.gradMean(assigned, cfg.featuresCol, wCol, cfg.kernel, dim, centers.length)
@@ -712,24 +508,14 @@ object CenterInit {
 
   def kMeansParallel(df: DataFrame, cfg: LloydsConfig, numPoints: Long): Array[Array[Double]] = {
     val kernel = cfg.kernel
-    val sc = df.sparkSession.sparkContext
     val f = col(cfg.featuresCol)
     val l = 2.0 * cfg.k // oversampling per round
 
     var centers = samplePoints(df, cfg.featuresCol, 1, cfg.seed, numPoints).toBuffer
     var step = 0
     while (step < math.max(1, cfg.initSteps)) {
-      val bc = sc.broadcast(centers.toArray)
-      val bk = sc.broadcast(kernel)
-      val costUdf = udf { (xs: Seq[Double]) =>
-        val x = xs.toArray
-        var best = Double.MaxValue
-        val cs = bc.value
-        var i = 0
-        while (i < cs.length) { val d = bk.value.divergence(x, cs(i)); if (d < best) best = d; i += 1 }
-        best
-      }
-      val withCost = df.select(f.as("__f")).withColumn("__c", costUdf(col("__f")))
+      val cost = NearestCenter.column(col("__f"), centers.toArray, kernel).getField("dist")
+      val withCost = df.select(f.as("__f")).withColumn("__c", cost)
       val totalCost = withCost.agg(sum("__c")).head().getDouble(0)
       if (totalCost <= 0) {
         step = cfg.initSteps // degenerate: all points identical to centers
@@ -751,7 +537,7 @@ object CenterInit {
     } else {
       // weight candidates by how many points they attract, then local
       // weighted k-means++ on the driver (candidate pool is O(l*initSteps)).
-      val assigned = Assignment.assignBroadcast(df.select(f.as(cfg.featuresCol)), cfg.featuresCol, kernel, cand)
+      val assigned = Assignment.assign(df.select(f.as(cfg.featuresCol)), cfg.featuresCol, kernel, cand)
       val counts = assigned.groupBy("cluster").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
       val weights = cand.indices.map(i => counts.getOrElse(i, 0L).toDouble + 1.0).toArray

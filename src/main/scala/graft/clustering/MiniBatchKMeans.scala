@@ -176,14 +176,13 @@ class MiniBatchKMeans(override val uid: String)
 
     while (iter < $(maxIter) && !converged) {
       val batch = data.sample(withReplacement = false, fraction, $(seed) + iter)
-      // the assignment plan gets its OWN copy of the centers: broadcast
-      // of a local-mode driver object is BY REFERENCE, so the in-place
-      // merge below would otherwise leak into the reassignment rule's
-      // lazy re-execution of this plan (caught live by the
-      // q_minibatch_reassign oracle — the dying-center candidate must be
-      // ranked by distance to the PRE-update centers on every deployment)
-      val assigned = Assignment.assign(batch, arrCol, kern,
-        centers.map(_.clone()), $(assignmentStrategy), oneShot = false)
+      // the assignment plan reads its OWN copy of the centers (Assignment
+      // .assign copies before broadcasting — local-mode broadcast is BY
+      // REFERENCE), so the in-place merge below cannot leak into the
+      // reassignment rule's lazy re-execution of this plan (caught live by
+      // the q_minibatch_reassign oracle — the dying-center candidate must
+      // be ranked by distance to the PRE-update centers on every deployment)
+      val assigned = Assignment.assign(batch, arrCol, kern, centers, $(assignmentStrategy))
       val (batchW, batchCost) =
         MiniBatchKMeans.mergeBatch(MiniBatchKMeans.batchSums(assigned, arrCol, wCol, centers),
           centers, counts)
@@ -368,11 +367,10 @@ object MiniBatchKMeans
     val (dfArr, arrCol) = FeatureCols.asArray(projected, featuresCol)
     val cs = centers.map(_.clone())
     val cn = counts.clone()
-    // private copy for the plan: local-mode broadcast is by reference,
-    // and the reassignment rule re-executes this plan AFTER mergeBatch
-    // mutates cs — candidates must rank by the PRE-update distances
-    val assigned = Assignment.assign(dfArr, arrCol, kern,
-      centers.map(_.clone()), strategy = "auto", oneShot = false)
+    // the plan reads Assignment.assign's private copy: the reassignment
+    // rule re-executes it AFTER mergeBatch mutates cs — candidates must
+    // rank by the PRE-update distances
+    val assigned = Assignment.assign(dfArr, arrCol, kern, cs)
     mergeBatch(batchSums(assigned, arrCol, lit(1.0), cs), cs, cn)
     if (reassignmentRatio > 0)
       reassignDying(assigned, arrCol, cs, cn, reassignmentRatio,

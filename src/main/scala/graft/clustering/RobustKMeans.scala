@@ -92,7 +92,7 @@ class RobustKMeans(override val uid: String)
     var thr = Double.MaxValue
 
     while (iter < $(maxIter) && !converged) {
-      val assigned = Assignment.assign(data, arrCol, kern, centers, $(assignmentStrategy), oneShot = false)
+      val assigned = Assignment.assign(data, arrCol, kern, centers, $(assignmentStrategy))
       val robustW: Column = $(outlierMode) match {
         case "m_estimator" =>
           when(col("dist") <= thr, userW).otherwise(userW * lit(thr) / col("dist"))
@@ -135,7 +135,7 @@ class RobustKMeans(override val uid: String)
     // (reference: ml/RobustKMeans.scala noiseCluster mode, prediction -1)
     val noiseThr =
       if ($(outlierMode) == "noiseCluster" && $(outlierFraction) > 0.0) {
-        val assigned = Assignment.assign(data, arrCol, kern, centers, $(assignmentStrategy), oneShot = false)
+        val assigned = Assignment.assign(data, arrCol, kern, centers, $(assignmentStrategy))
         assigned.agg(percentile_approx(col("dist"), lit(keepQuantile), lit(10000)))
           .head().getDouble(0)
       } else Double.NaN

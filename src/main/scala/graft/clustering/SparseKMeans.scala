@@ -4,6 +4,8 @@ import org.apache.spark.ml.Estimator
 import org.apache.spark.ml.linalg.{SparseVector, Vector}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.Identifiable
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -145,11 +147,13 @@ class SparseKMeans(override val uid: String)
     val data = df.select(toSparse(col($(featuresCol))).as("s"))
       .select(col("s._1").as("d"), col("s._2").as("idx"), col("s._3").as("vals"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // row count and dimension in one aggregation (it also fills the cache)
-    val stats = data.agg(count(lit(1)), max(col("d"))).head()
-    val n = stats.getLong(0)
+    // row count and dimension in one shuffle-free pass (it also fills the
+    // cache); the (idx, vals) rows are then re-read by every iteration
+    val rows = data.select(col("idx"), col("vals")).queryExecution.toRdd
+    val (n, dim) = data.select(col("d")).queryExecution.toRdd
+      .aggregate((0L, 0))((a, r) => (a._1 + 1, math.max(a._2, r.getInt(0))),
+        (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
     require(n > 0, "empty input")
-    val dim = stats.getInt(1)
 
     // init: k distinct sampled rows, densified driver-side (k x d only)
     def densify(idx: Seq[Int], vals: Seq[Double]): Array[Double] = {
@@ -186,69 +190,7 @@ class SparseKMeans(override val uid: String)
     val distHist = Seq.newBuilder[Double]
 
     while (iter < $(maxIter) && !converged) {
-      val bcC = sc.broadcast(centers)
-      val bcN = sc.broadcast(centers.map(c => { var s = 0.0; var i = 0; while (i < c.length) { s += c(i) * c(i); i += 1 }; s }))
-      // per-center zero terms for the nnz-only decomposition:
-      //   kl: Z_c = sum_j eps*log(eps/(mu_j+eps));  l1: Z_c = sum_j |mu_j|
-      val bcZ = sc.broadcast(mode match {
-        case "kl" => centers.map(c => c.map(m => eps * math.log(eps / (m + eps))).sum)
-        case "l1" => centers.map(c => c.map(math.abs).sum)
-        case _    => centers.map(_ => 0.0)
-      })
-      val asgUdf = udf { (idxSeq: Seq[Int], valsSeq: Seq[Double]) =>
-        val idx = idxSeq.toArray
-        val vals = valsSeq.toArray
-        val cs = bcC.value
-        val cn = bcN.value
-        var x2 = 0.0
-        var t = 0
-        while (t < vals.length) { x2 += vals(t) * vals(t); t += 1 }
-        var best = 0
-        var bd = Double.MaxValue
-        var c = 0
-        while (c < cs.length) {
-          var d = 0.0
-          mode match {
-            case "spherical" =>
-              var dot = 0.0
-              var i = 0
-              while (i < idx.length) { dot += vals(i) * cs(c)(idx(i)); i += 1 }
-              d = 1.0 - dot / math.max(1e-300, math.sqrt(x2) * math.sqrt(cn(c)))
-            case "kl" =>
-              // Z_c + sum_nnz [(v+eps)log((v+eps)/(mu+eps)) - eps*log(eps/(mu+eps))]
-              d = bcZ.value(c)
-              var i = 0
-              while (i < idx.length) {
-                val m = cs(c)(idx(i)) + eps
-                val v = vals(i) + eps
-                d += v * math.log(v / m) - eps * math.log(eps / m)
-                i += 1
-              }
-            case "l1" =>
-              // Z_c + sum_nnz [|v - mu| - |mu|]
-              d = bcZ.value(c)
-              var i = 0
-              while (i < idx.length) {
-                val m = cs(c)(idx(i))
-                d += math.abs(vals(i) - m) - math.abs(m)
-                i += 1
-              }
-            case _ =>
-              var dot = 0.0
-              var i = 0
-              while (i < idx.length) { dot += vals(i) * cs(c)(idx(i)); i += 1 }
-              d = 0.5 * (x2 - 2.0 * dot + cn(c))
-          }
-          if (d < bd) { bd = d; best = c }
-          c += 1
-        }
-        (best, bd)
-      }
-      val assigned = data
-        .withColumn("__b", asgUdf(col("idx"), col("vals")))
-        .select(col("idx"), col("vals"),
-          col("__b._1").as("cluster"), col("__b._2").as("dist"))
-
+      val near = new SparseKMeans.Nearest(mode, eps, centers)
       var distortion = 0.0
       val updated = scala.collection.mutable.Map[Int, Array[Double]]()
       if (mode == "l1") {
@@ -256,18 +198,20 @@ class SparseKMeans(override val uid: String)
         // nnz rows explode to (cluster, d, v, w=1); each (cluster, d) also
         // gets a synthetic v=0 row of weight n_c - nnzCount. Dims with no
         // nonzero anywhere in a cluster stay 0 (the majority value).
+        val bc = sc.broadcast(near)
+        val asgUdf = udf { (idx: Seq[Int], vals: Seq[Double]) =>
+          bc.value(idx.toArray, vals.toArray)
+        }
+        val assigned = data
+          .withColumn("__b", asgUdf(col("idx"), col("vals")))
+          .select(col("idx"), col("vals"),
+            col("__b._1").as("cluster"), col("__b._2").as("dist"))
         distortion += medianUpdateSparse(assigned, dim, updated)
       } else {
-        // kl aggregates SHIFTED gradients grad(v)-grad(0) = log((v+eps)/eps)
-        // so implicit zeros add exactly nothing to the buffer; the centroid
+        // kl sums SHIFTED gradients grad(v)-grad(0) = log((v+eps)/eps), so
+        // implicit zeros add exactly nothing to the buffer; the centroid
         // eps*exp(buffer/n) equals the dense gradient-mean centroid.
-        val aggInput =
-          if (mode == "kl")
-            assigned.withColumn("vals",
-              transform(col("vals"),
-                v => org.apache.spark.sql.functions.log((v + lit(eps)) / lit(eps))))
-          else assigned
-        val sums = SparseKMeans.clusterSums(aggInput, centers.length, dim)
+        val sums = SparseKMeans.clusterSums(rows, near, dim)
         centers.indices.foreach { cid =>
           val base = cid * (dim + 2)
           val cnt = sums(base + dim)
@@ -359,29 +303,105 @@ class SparseKMeans(override val uid: String)
 
 object SparseKMeans extends org.apache.spark.ml.util.DefaultParamsReadable[SparseKMeans] {
 
-  /** Per-cluster (Σ x, row count, Σ dist) over (cluster, idx, vals, dist)
-    * rows as one k×(dim+2) buffer (the CenterSums layout), in ONE job with
-    * no shuffle: each partition scatters its rows' nnz values into a dense
-    * buffer — O(nnz) adds per row, a densify-first plan does O(d) — and the
-    * partition buffers are tree-reduced.
+  /** Nearest center of a sparse row (idx, vals) in O(nnz) per center,
+    * ties to the lowest index: the dense divergence decomposed into a
+    * per-center term over the implicit zeros plus a sum over the nonzeros.
     */
-  private[clustering] def clusterSums(assigned: DataFrame, k: Int, dim: Int): Array[Double] = {
-    val width = dim + 2
-    assigned.select(col("cluster"), col("idx"), col("vals"), col("dist")).queryExecution.toRdd
-      .mapPartitions { rows =>
-        val buf = new Array[Double](k * width)
-        rows.foreach { r =>
-          val base = r.getInt(0) * width
-          val idx = r.getArray(1)
-          val vals = r.getArray(2)
-          var i = 0
-          while (i < idx.numElements()) { buf(base + idx.getInt(i)) += vals.getDouble(i); i += 1 }
-          buf(base + dim) += 1.0
-          buf(base + dim + 1) += r.getDouble(3)
+  private[clustering] final class Nearest(val mode: String, val eps: Double,
+      val centers: Array[Array[Double]]) extends Serializable {
+    private val norms = centers.map { c =>
+      var s = 0.0; var i = 0; while (i < c.length) { s += c(i) * c(i); i += 1 }; s
+    }
+    // per-center zero terms for the nnz-only decomposition:
+    //   kl: Z_c = sum_j eps*log(eps/(mu_j+eps));  l1: Z_c = sum_j |mu_j|
+    private val zeros = mode match {
+      case "kl" => centers.map(c => c.map(m => eps * math.log(eps / (m + eps))).sum)
+      case "l1" => centers.map(c => c.map(math.abs).sum)
+      case _    => centers.map(_ => 0.0)
+    }
+
+    def apply(idx: Array[Int], vals: Array[Double]): (Int, Double) = {
+      val cs = centers
+      var x2 = 0.0
+      var t = 0
+      while (t < vals.length) { x2 += vals(t) * vals(t); t += 1 }
+      var best = 0
+      var bd = Double.MaxValue
+      var c = 0
+      while (c < cs.length) {
+        var d = 0.0
+        mode match {
+          case "spherical" =>
+            var dot = 0.0
+            var i = 0
+            while (i < idx.length) { dot += vals(i) * cs(c)(idx(i)); i += 1 }
+            d = 1.0 - dot / math.max(1e-300, math.sqrt(x2) * math.sqrt(norms(c)))
+          case "kl" =>
+            // Z_c + sum_nnz [(v+eps)log((v+eps)/(mu+eps)) - eps*log(eps/(mu+eps))]
+            d = zeros(c)
+            var i = 0
+            while (i < idx.length) {
+              val m = cs(c)(idx(i)) + eps
+              val v = vals(i) + eps
+              d += v * math.log(v / m) - eps * math.log(eps / m)
+              i += 1
+            }
+          case "l1" =>
+            // Z_c + sum_nnz [|v - mu| - |mu|]
+            d = zeros(c)
+            var i = 0
+            while (i < idx.length) {
+              val m = cs(c)(idx(i))
+              d += math.abs(vals(i) - m) - math.abs(m)
+              i += 1
+            }
+          case _ =>
+            var dot = 0.0
+            var i = 0
+            while (i < idx.length) { dot += vals(i) * cs(c)(idx(i)); i += 1 }
+            d = 0.5 * (x2 - 2.0 * dot + norms(c))
         }
-        Iterator.single(buf)
+        if (d < bd) { bd = d; best = c }
+        c += 1
       }
-      .treeReduce { (a, b) => var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a }
+      (best, bd)
+    }
+  }
+
+  /** One sparse Lloyd pass over (idx, vals) rows: assign each row with
+    * `near`, then per cluster (Σ x, row count, Σ dist) into one k×(dim+2)
+    * buffer (the CenterSums layout) — KL sums the shifted gradient
+    * log((v+eps)/eps) — in ONE job with no shuffle: each partition
+    * scatters its rows' nnz values into a dense buffer (O(nnz) adds per
+    * row; a densify-first plan does O(d)) and the partition buffers are
+    * tree-reduced. The centers travel in the task closure, so every task
+    * reads the iteration's own snapshot.
+    */
+  private[clustering] def clusterSums(rows: RDD[InternalRow], near: Nearest,
+      dim: Int): Array[Double] = {
+    val width = dim + 2
+    val k = near.centers.length
+    val eps = near.eps
+    val klShift = near.mode == "kl"
+    rows.mapPartitions { it =>
+      val buf = new Array[Double](k * width)
+      it.foreach { r =>
+        val idx = r.getArray(0).toIntArray()
+        val vals = r.getArray(1).toDoubleArray()
+        val (c, dist) = near(idx, vals)
+        val base = c * width
+        var i = 0
+        if (klShift) {
+          // StrictMath: the `log` Spark's own expression evaluates
+          while (i < idx.length) { buf(base + idx(i)) += StrictMath.log((vals(i) + eps) / eps); i += 1 }
+        } else {
+          while (i < idx.length) { buf(base + idx(i)) += vals(i); i += 1 }
+        }
+        buf(base + dim) += 1.0
+        buf(base + dim + 1) += dist
+      }
+      Iterator.single(buf)
+    }.treeReduce { (a, b) => var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a }
   }
 
   private[graft] def l2normalize(v: Array[Double]): Array[Double] = {

@@ -249,29 +249,6 @@ case class ArrayLogisticDiv(left: Expression, right: Expression, eps: Double)
     copy(left = l, right = r)
 }
 
-/** Σ (x_i+ε)·(log(x_i+ε) − logμ_i) where the RIGHT side is the
-  * pre-logged center (log(μ+ε) folded to a literal on the driver) — the
-  * training-loop form: one `log` per element instead of two.
-  */
-case class ArrayKlPreLogged(left: Expression, right: Expression, eps: Double)
-    extends ArrayFoldExpression {
-  override def prettyName: String = "graft_kl_prelogged"
-  override protected def fold(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
-    var s = 0.0; var i = 0
-    while (i < n) {
-      val x = a.getDouble(i) + eps
-      s += x * (math.log(x) - b.getDouble(i))
-      i += 1
-    }
-    s
-  }
-  override protected def perElement(x: String, y: String, s: String): String =
-    s"final double xs = $x + $eps; $s += xs * (java.lang.Math.log(xs) - $y);"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 /** Column-level helpers + SQL registration for the native expressions. */
 object ArrayMath {
 
@@ -298,8 +275,6 @@ object ArrayMath {
   /** ε-smoothed KL */
   def kl(a: Column, b: Column, eps: Double = 1e-10): Column =
     GraftSqlBridge.column(ArrayKlDiv(toDouble(a), toDouble(b), eps))
-  private[graft] def klPreLogged(a: Column, logMu: Column, eps: Double): Column =
-    GraftSqlBridge.column(ArrayKlPreLogged(toDouble(a), toDouble(logMu), eps))
   /** ε-smoothed Itakura-Saito */
   def itakuraSaito(a: Column, b: Column, eps: Double = 1e-10): Column =
     GraftSqlBridge.column(ArrayIsDiv(toDouble(a), toDouble(b), eps))

@@ -1,17 +1,14 @@
 package graft.kernels
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** Divergence kernels for generalized k-means.
   *
   * Semantics match the reference library's kernel layer
   * (reference: src/main/scala/com/massivedatascience/clusterer/ml/df/kernels/
   * ClusteringKernel.scala:16-46, BregmanKernel.scala:18-39) but the
   * implementation is Spark-first: every kernel operates on plain
-  * `Array[Double]` (the runtime form of an `array<double>` column) and can
-  * optionally emit a pure Catalyst Column for its distance so assignment
-  * stays inside WholeStageCodegen.
+  * `Array[Double]` (the runtime form of an `array<double>` column), which
+  * is what the native assignment expression
+  * ([[graft.functions.NearestCenter]]) calls per row.
   *
   * A Bregman divergence D_F(x, mu) = F(x) - F(mu) - <grad F(mu), x - mu>.
   * Lloyd's update for any Bregman divergence is the weighted mean in
@@ -54,16 +51,6 @@ trait BregmanKernel extends Serializable {
   /** Domain check for a single point. */
   def validate(x: Array[Double]): Boolean =
     x.forall(v => !v.isNaN && !v.isInfinity)
-
-  /** True when [[distExpr]] returns a pure-Catalyst distance column. */
-  def supportsExpressionOptimization: Boolean = false
-
-  /** Optional Catalyst expression computing D(features, center) where
-    * `features` is an `array<double>` column and `center` a literal vector.
-    * Pure-expression distances keep assignment inside codegen; kernels
-    * without one fall back to the broadcast-closure path.
-    */
-  def distExpr(features: Column, center: Array[Double]): Option[Column] = None
 }
 
 /** Squared Euclidean: F(x) = 1/2 ||x||^2, D = 1/2 ||x-mu||^2.
@@ -88,16 +75,6 @@ final class SquaredEuclideanKernel extends BregmanKernel {
 
   override def grad(x: Array[Double]): Array[Double] = x
   override def invGrad(theta: Array[Double]): Array[Double] = theta
-  override def supportsExpressionOptimization: Boolean = true
-
-  /** ½·Σ(x-c)² as ONE native codegen loop ([[graft.functions.ArraySqDist]]
-    * — the fused form is also numerically safer than the expanded
-    * x²-2xc+c² it replaces, and the center is a single Literal node
-    * instead of d `lit` children).
-    */
-  override def distExpr(features: Column, center: Array[Double]): Option[Column] =
-    Some(graft.functions.ArrayMath.sqdist(
-      features, graft.functions.ArrayMath.literal(center)) * lit(0.5))
 }
 
 /** Kullback-Leibler: F(x) = sum x_i log x_i, D = sum x_i log(x_i/mu_i) with
@@ -147,17 +124,6 @@ final class KLDivergenceKernel(val smoothing: Double = 1e-10) extends BregmanKer
 
   override def validate(x: Array[Double]): Boolean =
     x.forall(v => !v.isNaN && !v.isInfinity && v >= 0.0)
-
-  override def supportsExpressionOptimization: Boolean = true
-
-  override def distExpr(features: Column, center: Array[Double]): Option[Column] = {
-    // sum over i of (x_i+eps) * (log(x_i+eps) - log(c_i+eps)); the center-side
-    // log is folded to a literal array so only x-side math runs per row,
-    // and the fold itself is a native codegen loop.
-    val logC = center.map(v => math.log(v + smoothing))
-    Some(graft.functions.ArrayMath.klPreLogged(
-      features, graft.functions.ArrayMath.literal(logC), smoothing))
-  }
 }
 
 /** Itakura-Saito: D = sum (x/mu - log(x/mu) - 1), epsilon-smoothed.
@@ -201,11 +167,6 @@ final class ItakuraSaitoKernel(val smoothing: Double = 1e-10) extends BregmanKer
 
   override def validate(x: Array[Double]): Boolean =
     x.forall(v => !v.isNaN && !v.isInfinity && v >= 0.0)
-
-  override def supportsExpressionOptimization: Boolean = true
-  override def distExpr(features: Column, center: Array[Double]): Option[Column] =
-    Some(graft.functions.ArrayMath.itakuraSaito(
-      features, graft.functions.ArrayMath.literal(center), smoothing))
 }
 
 /** Generalized I-divergence: D = sum (x log(x/mu) - x + mu), eps-smoothed.
@@ -252,11 +213,6 @@ final class GeneralizedIDivergenceKernel(val smoothing: Double = 1e-10) extends 
 
   override def validate(x: Array[Double]): Boolean =
     x.forall(v => !v.isNaN && !v.isInfinity && v >= 0.0)
-
-  override def supportsExpressionOptimization: Boolean = true
-  override def distExpr(features: Column, center: Array[Double]): Option[Column] =
-    Some(graft.functions.ArrayMath.generalizedI(
-      features, graft.functions.ArrayMath.literal(center), smoothing))
 }
 
 /** Logistic loss (binary cross-entropy); domain (0,1), values clamped to
@@ -311,11 +267,6 @@ final class LogisticLossKernel(val smoothing: Double = 1e-10) extends BregmanKer
 
   override def validate(x: Array[Double]): Boolean =
     x.forall(v => !v.isNaN && !v.isInfinity && v >= 0.0 && v <= 1.0)
-
-  override def supportsExpressionOptimization: Boolean = true
-  override def distExpr(features: Column, center: Array[Double]): Option[Column] =
-    Some(graft.functions.ArrayMath.logisticLoss(
-      features, graft.functions.ArrayMath.literal(center), smoothing))
 }
 
 /** Beta-divergence family: F_β(x) = Σ (x+eps)^β / (β(β−1)), the parametric
@@ -402,11 +353,6 @@ final class L1Kernel extends BregmanKernel {
 
   override def grad(x: Array[Double]): Array[Double] = x
   override def invGrad(theta: Array[Double]): Array[Double] = theta
-  override def supportsExpressionOptimization: Boolean = true
-
-  override def distExpr(features: Column, center: Array[Double]): Option[Column] =
-    Some(graft.functions.ArrayMath.l1dist(
-      features, graft.functions.ArrayMath.literal(center)))
 
   /** True median update, not gradient mean. */
   def isMedianUpdate: Boolean = true
@@ -444,19 +390,6 @@ final class SphericalKernel extends BregmanKernel {
 
   override def grad(x: Array[Double]): Array[Double] = normalize(x)
   override def invGrad(theta: Array[Double]): Array[Double] = normalize(theta)
-}
-
-object BregmanKernel {
-
-  /** A literal array<double> Column from a driver-side vector (ONE
-    * Literal node — not d `lit` children).
-    */
-  def literalArray(values: Array[Double]): Column =
-    graft.functions.ArrayMath.literal(values)
-
-  /** <features, c> as a native codegen expression (c folded to a literal). */
-  def dotWithLiteral(features: Column, c: Array[Double]): Column =
-    graft.functions.ArrayMath.dot(features, literalArray(c))
 }
 
 /** Name -> kernel dispatch with the reference's aliases, plus a

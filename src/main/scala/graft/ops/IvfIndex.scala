@@ -200,7 +200,7 @@ object IvfIndex {
     gk.knownN = Some(n)
     val model = gk.fit(c)
     val cents = model.clusterCenters
-    val cells = assignCells(c, cents)
+    val cells = assignCells(c, cents, vecCol)
     c.unpersist()
     new IvfIndex(cells, cents)
   }
@@ -228,7 +228,7 @@ object IvfIndex {
     val c = Dedup.fanOut(corpus
       .select(col(idCol).as("corpus_id"), col(vecCol).cast("array<double>").as("cv")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val cells = assignCells(c, snap)
+    val cells = assignCells(c, snap, vecCol)
     c.unpersist()
     new IvfIndex(cells, snap)
   }
@@ -246,21 +246,12 @@ object IvfIndex {
         .orderBy("cluster").collect().map(_.getSeq[Double](1).toArray))
 
   /** Nearest-center cell assignment, materialized once so every later
-    * search skips it. Ties resolve to the lowest cell index.
+    * search skips it. Ties resolve to the lowest cell index; a null vector
+    * fails the job, naming the caller's `vecCol`.
     */
-  private def assignCells(c: DataFrame, cents: Array[Array[Double]]): DataFrame = {
-    val bc = c.sparkSession.sparkContext.broadcast(cents)
-    val kern = new SquaredEuclideanKernel
-    val cellUdf = udf { (xs: Seq[Double]) =>
-      val x = xs.toArray
-      var best = 0; var bd = Double.MaxValue
-      var i = 0
-      while (i < bc.value.length) {
-        val d = kern.divergence(x, bc.value(i)); if (d < bd) { bd = d; best = i }; i += 1
-      }
-      best
-    }
-    val cells = c.withColumn("cell", cellUdf(col("cv")))
+  private def assignCells(c: DataFrame, cents: Array[Array[Double]], vecCol: String): DataFrame = {
+    val cells = c
+      .withColumn("cell", Similarity.cellOf(col("cv"), cents, s"IvfIndex column '$vecCol'"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     cells.count()
     cells
@@ -313,7 +304,7 @@ object IvfIndex {
         "append would wedge the store for every later read)")
     val c = Dedup.fanOut(raw
       .select(col("corpus_id").cast(storedIdType).as("corpus_id"), col("cv")))
-    val cells = assignCells(c, cents)
+    val cells = assignCells(c, cents, vecCol)
     try {
       val n = cells.count()
       cells.write.mode("append").partitionBy("cell").parquet(s"$path/cells")

@@ -47,35 +47,18 @@ object Prototypes {
     require(centroids.map(_.length).distinct.length == 1,
       "prototypicality: centroids must share one dimensionality")
     val spark = df.sparkSession
-    val bc = spark.sparkContext.broadcast(centroids)
-    val dim = centroids(0).length
-    val cellUdf = udf { (xsSeq: Seq[Double]) =>
-      val xs = xsSeq.toArray
-      require(xs.length == dim,
-        s"prototypicality: expected $dim-dim vectors, got ${xs.length}")
-      val cs = bc.value
-      var best = 0; var bd = Double.MaxValue
-      var i = 0
-      while (i < cs.length) {
-        val c = cs(i)
-        var d = 0.0; var j = 0
-        while (j < c.length) { val t = xs(j) - c(j); d += t * t; j += 1 }
-        if (d < bd) { bd = d; best = i }
-        i += 1
-      }
-      best
-    }
     import spark.implicits._
     val centDf = broadcast(
       centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
         .toDF("cluster", "__ct"))
     // null embeddings are DROPPED (a rank contract cannot carry them;
     // same policy as the dedup keepers' null-content rule) rather than
-    // surfacing as an opaque NPE inside the assignment UDF
+    // failing the cell assignment
     val assigned = df
       .select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
       .where(col("__v").isNotNull)
-      .withColumn("cluster", cellUdf(col("__v")))
+      .withColumn("cluster",
+        Similarity.cellOf(col("__v"), centroids, s"prototypicality column '$vecCol'"))
       .join(centDf, Seq("cluster"))
       .withColumn("__sim", graft.functions.ArrayMath.cosine(col("__v"), col("__ct")))
     val w = Window.partitionBy(col("cluster"))

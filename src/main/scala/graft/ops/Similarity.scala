@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
+import graft.functions.NearestCenter
+import graft.kernels.SquaredEuclideanKernel
 
 /** Similarity search over embedding columns (`array<float>`/`array<double>`).
   *
@@ -336,10 +338,20 @@ object Similarity {
       excludeSelf: Boolean = true): DataFrame = {
     val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).cast("array<double>").as("cv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-    val joined = ivfCandidates(c, q, centroids, nProbe)
+    val joined = ivfCandidates(c, q, centroids, nProbe, vecCol)
       .where(if (excludeSelf) col("corpus_id") =!= col("query_id") else lit(true))
     topKByCosine(joined, k)
   }
+
+  /** Nearest coarse cell of a vector column: squared Euclidean, ties to
+    * the lowest index ([[graft.functions.NearestCenter]]). A null vector
+    * fails the job with a message naming `source`, never a null cell.
+    */
+  private[ops] def cellOf(v: Column, centroids: Array[Array[Double]], source: String): Column =
+    coalesce(
+      NearestCenter.column(v, centroids, new SquaredEuclideanKernel).getField("cluster"),
+      raise_error(lit(s"$source holds a null vector: drop or impute null vectors first"))
+        .cast("int"))
 
   /** Shared IVF candidate generation ([[ivfTopK]], [[ivfHardNegatives]]):
     * assign each corpus row its nearest coarse cell, each query its
@@ -352,26 +364,17 @@ object Similarity {
       c: DataFrame,
       q: DataFrame,
       centroids: Array[Array[Double]],
-      nProbe: Int): DataFrame = {
-    import graft.kernels.SquaredEuclideanKernel
+      nProbe: Int,
+      vecCol: String): DataFrame = {
     val kern = new SquaredEuclideanKernel
     val spark = c.sparkSession
     val bc = spark.sparkContext.broadcast(centroids)
-    val cellUdf = udf { (xs: Seq[Double]) =>
-      val x = xs.toArray
-      var best = 0; var bd = Double.MaxValue
-      var i = 0
-      while (i < bc.value.length) {
-        val d = kern.divergence(x, bc.value(i)); if (d < bd) { bd = d; best = i }; i += 1
-      }
-      best
-    }
     val probeUdf = udf { (xs: Seq[Double]) =>
       val x = xs.toArray
       bc.value.indices.map(i => (kern.divergence(x, bc.value(i)), i))
         .sortBy(t => (t._1, t._2)).take(nProbe).map(_._2)
     }
-    c.withColumn("cell", cellUdf(col("cv")))
+    c.withColumn("cell", cellOf(col("cv"), centroids, s"IVF corpus column '$vecCol'"))
       .join(broadcast(q.withColumn("cell", explode(probeUdf(col("qv"))))), Seq("cell"))
   }
 
@@ -400,7 +403,7 @@ object Similarity {
       col(vecCol).cast("array<double>").as("cv"))
     val q = queries.select(col(idCol).as("query_id"), col(labelCol).as("__ql"),
       col(vecCol).cast("array<double>").as("qv"))
-    val joined = ivfCandidates(c, q, centroids, nProbe)
+    val joined = ivfCandidates(c, q, centroids, nProbe, vecCol)
       .where(col("neg_label") =!= col("__ql"))
     topKByCosine(joined, k, Seq("neg_label"))
   }

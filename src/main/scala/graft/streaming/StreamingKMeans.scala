@@ -114,7 +114,7 @@ class StreamingKMeansModel(
     val (centers, weights) = state
     val dim = centers.headOption.map(_.length).getOrElse(0)
 
-    val assigned = Assignment.assign(df, arrCol, kern, centers, getAssignmentStrategy, oneShot = false)
+    val assigned = Assignment.assign(df, arrCol, kern, centers, getAssignmentStrategy)
     val upd = Update.gradMean(assigned, arrCol, lit(1.0), kern, dim, centers.length)
     val batchTotal = upd.weights.values.sum
 

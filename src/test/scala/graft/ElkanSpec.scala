@@ -24,7 +24,7 @@ class ElkanSpec extends SparkSpec {
     val df = blobs(40, 8, 3)
     val rnd = new java.util.Random(5)
     val centers = Array.fill(8)(Array(rnd.nextGaussian() * 15, rnd.nextGaussian() * 15))
-    val exact = Assignment.assignBroadcast(df, "features", new graft.kernels.SquaredEuclideanKernel, centers)
+    val exact = Assignment.assign(df, "features", new graft.kernels.SquaredEuclideanKernel, centers)
       .select("features", "cluster", "dist").collect()
       .map(r => r.getSeq[Double](0) -> (r.getInt(1), r.getDouble(2))).toMap
     val fast = ElkanAssignment.assign(df, "features", centers)

@@ -39,11 +39,22 @@ class GeneralizedKMeansSpec extends SparkSpec {
     }
   }
 
-  test("expression and broadcast assignment agree") {
+  test("assignmentStrategy: an unknown name is refused at set time; a persisted model " +
+    "carrying each accepted name loads and transforms") {
+    val ex = intercept[IllegalArgumentException](new GeneralizedKMeans().setAssignmentStrategy("elkn"))
+    assert(ex.getMessage.contains("assignmentStrategy"))
     val m = new GeneralizedKMeans().setK(3).setSeed(5).setMaxIter(10).fit(blobs)
-    val e = m.setAssignmentStrategy("expression").transform(blobs).select("prediction").collect().map(_.getInt(0)).toSeq
-    val b = m.setAssignmentStrategy("broadcast").transform(blobs).select("prediction").collect().map(_.getInt(0)).toSeq
-    assert(e == b)
+    intercept[IllegalArgumentException](m.setAssignmentStrategy("Broadcast"))
+    val want = m.transform(blobs).select("prediction").collect().map(_.getInt(0)).toSeq
+    val dir = java.nio.file.Files.createTempDirectory("gkm-strategy").toString
+    for (name <- Assignment.Strategies) {
+      val path = s"$dir/$name"
+      m.copy(org.apache.spark.ml.param.ParamMap.empty).setAssignmentStrategy(name).save(path, spark)
+      val loaded = GeneralizedKMeansModel.load(path, spark)
+      assert(loaded.getAssignmentStrategy == name)
+      assert(loaded.transform(blobs).select("prediction").collect().map(_.getInt(0)).toSeq == want,
+        s"model persisted with '$name'")
+    }
   }
 
   test("KL divergence clusters on simplex data") {

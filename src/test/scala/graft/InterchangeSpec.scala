@@ -89,9 +89,9 @@ class InterchangeSpec extends SparkSpec {
     assert(recomputed == metaHash)
   }
 
-  test("loads a foreign LayoutV1 model (reference writer shape, unknown params ignored)") {
+  /** A LayoutV1 model exactly as the reference writes it. */
+  private def writeForeign(path: String, strategy: String = "auto"): Unit = {
     import spark.implicits._
-    val path = tmpDir() + "/foreign"
     // centers.parquet exactly as the reference writes it:
     // (center_id INT, weight DOUBLE, vector ml VectorUDT), one file
     Seq(
@@ -102,10 +102,10 @@ class InterchangeSpec extends SparkSpec {
     // metadata.json with the reference's key order, a params entry we don't
     // model (checkpointDir), and an unknown future param (convergenceMetric)
     val meta =
-      """{"layoutVersion":1,"algo":"GeneralizedKMeansModel","sparkMLVersion":"3.5.1",
+      s"""{"layoutVersion":1,"algo":"GeneralizedKMeansModel","sparkMLVersion":"3.5.1",
         |"scalaBinaryVersion":"2.12","divergence":"squaredEuclidean","k":2,"dim":2,
         |"uid":"gkmeans_ref1","kernelName":"SquaredEuclidean",
-        |"params":{"maxIter":20,"tol":1.0E-4,"seed":1234,"assignmentStrategy":"auto",
+        |"params":{"maxIter":20,"tol":1.0E-4,"seed":1234,"assignmentStrategy":"$strategy",
         |"smoothing":1.0E-10,"emptyClusterStrategy":"reseedRandom","checkpointInterval":10,
         |"initMode":"k-means||","initSteps":2,"featuresCol":"features",
         |"predictionCol":"prediction","distanceCol":"","weightCol":"",
@@ -114,6 +114,12 @@ class InterchangeSpec extends SparkSpec {
         |"checksums":{"centersParquetSHA256":"","metadataCanonicalSHA256":""}}""".stripMargin
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$path/metadata.json"),
       meta.getBytes("UTF-8"))
+  }
+
+  test("loads a foreign LayoutV1 model (reference writer shape, unknown params ignored)") {
+    import spark.implicits._
+    val path = tmpDir() + "/foreign"
+    writeForeign(path)
 
     val m = InterchangeV1.load(spark, path)
     assert(m.uid == "gkmeans_ref1")
@@ -127,6 +133,15 @@ class InterchangeSpec extends SparkSpec {
     val out = m.transform(Seq((1L, Seq(1.1, 2.1)), (2L, Seq(-3.0, 3.9)))
       .toDF("id", "features"))
     assert(out.select("prediction").as[Int].collect().toSeq == Seq(0, 1))
+  }
+
+  test("a foreign model's strategy name maps onto the accepted names") {
+    for ((theirs, ours) <- Seq("crossJoin" -> "crossjoin", "Broadcast" -> "broadcast",
+        "adaptive" -> "auto")) {
+      val path = tmpDir() + "/foreign"
+      writeForeign(path, theirs)
+      assert(InterchangeV1.load(spark, path).getAssignmentStrategy == ours, theirs)
+    }
   }
 
   test("loads the PINNED reference-layout fixture artifact (strict checksums)") {

@@ -24,7 +24,7 @@ class LloydsUpdateSpec extends SparkSpec {
     }
     val centers = pts.take(k).map(_.clone())
     val assigned = Assignment.assign(pts.map(_.toSeq).toSeq.toDF("features"), "features",
-      kernel, centers, "broadcast", oneShot = false)
+      kernel, centers, "broadcast")
     (pts, centers, assigned)
   }
 

@@ -49,6 +49,43 @@ class PlanShapeSpec extends SparkSpec {
     assert(sums.collect().length == 1)
   }
 
+  /** One Lloyd iteration as the fit runs it: assign, then the update. */
+  private def lloydIteration(centers: Array[Array[Double]]) = {
+    val emb = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
+      .select(col("embedding").cast("array<double>").as("features"))
+    val kernel = new graft.kernels.KLDivergenceKernel()
+    val assigned = graft.clustering.Assignment.assign(emb, "features", kernel, centers)
+    graft.clustering.Update.sumsFrame(assigned, "features", lit(1.0), kernel, 64, centers.length)
+  }
+
+  private def iterationCenters(seed: Int) = {
+    val rnd = new java.util.Random(seed)
+    Array.fill(4)(Array.fill(64)(rnd.nextDouble()))
+  }
+
+  test("Lloyd iteration assigns through exactly one NearestCenter and no ScalaUDF") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    val sums = lloydIteration(iterationCenters(1))
+    assert(sums.collect().length == 1)
+    val plan = sums.queryExecution.executedPlan
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val exprs = helper.collect(plan) { case p => p.expressions }.flatten
+      .flatMap(_.collect { case e => e })
+    // one node: the struct is evaluated once per row, not once per field
+    assert(exprs.count(_.isInstanceOf[graft.functions.NearestCenter]) == 1,
+      s"expected one NearestCenter:\n$plan")
+    assert(!exprs.exists(_.isInstanceOf[ScalaUDF]), s"ScalaUDF in iteration plan:\n$plan")
+  }
+
+  test("a second Lloyd iteration with new centers of the same shape compiles no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    lloydIteration(iterationCenters(2)).collect()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    lloydIteration(iterationCenters(3)).collect()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+      "the generated code must not depend on the center values")
+  }
+
   test("brute-force top-k plans a map-side WindowGroupLimit before the shuffle") {
     val emb = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").as("v"))

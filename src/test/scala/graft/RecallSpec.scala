@@ -555,6 +555,21 @@ class RecallSpec extends SparkSpec {
       projMap.forall { case (k, v) => v.sameElements(again(k)) })
   }
 
+  test("IVF cell assignment refuses a null vector, naming its column") {
+    import spark.implicits._
+    val df = Seq((1L, Some(Seq(1.0, 0.0))), (2L, None), (3L, Some(Seq(0.0, 1.0))))
+      .toDF("vec_id", "emb")
+    val centers = Array(Array(1.0, 0.0), Array(0.0, 1.0))
+    def message(f: => Any): String = {
+      val ex = intercept[Exception](f)
+      Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    }
+    assert(message(graft.ops.IvfIndex.buildWithCenters(df, "vec_id", "emb", centers))
+      .contains("'emb' holds a null vector"))
+    assert(message(Similarity.ivfTopK(df, df.where(col("emb").isNotNull), "vec_id", "emb",
+      1, centers, nProbe = 1).collect()).contains("'emb' holds a null vector"))
+  }
+
   test("randomProject propagates null embeddings instead of an opaque NPE") {
     import spark.implicits._
     val df = Seq((1L, Some(Seq(1.0, 2.0, 3.0, 4.0))), (2L, None))

@@ -5,7 +5,7 @@ import graft.kernels.{BetaDivergenceKernel, KernelFactory, SquaredEuclideanKerne
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Round-16 hardening: forced-chunk gate coverage, MI driver-collect cap,
+/** Round-16 hardening: MI driver-collect cap,
   * parametric beta-divergence family, memo-cache fingerprinting.
   */
 class Round16Spec extends SparkSpec {
@@ -20,38 +20,6 @@ class Round16Spec extends SparkSpec {
       _ <- 1 to perBlob
     } yield (Seq(cx + rnd.nextGaussian() * 0.5, cy + rnd.nextGaussian() * 0.5), label)
     pts.toDF("features", "label")
-  }
-
-  // ---- chunk-budget conf override (the q_kmeans_fit_chunked knob) ----
-
-  test("graft.assign.chunkElems overrides the heap-probed chunk budget") {
-    val probed = Assignment.chunkElemsBudget(spark)
-    spark.conf.set("graft.assign.chunkElems", "256")
-    try assert(Assignment.chunkElemsBudget(spark) == 256L)
-    finally spark.conf.unset("graft.assign.chunkElems")
-    assert(Assignment.chunkElemsBudget(spark) == probed)
-  }
-
-  test("forced multi-chunk fit equals single-broadcast fit exactly") {
-    // 3 centers x 2 dims = 6 elems; budget 4 -> perChunk 2 -> 2 chunks,
-    // so the `least` struct fold runs in EVERY iteration of the fit —
-    // the same configuration q_kmeans_fit_chunked drives at the gate.
-    val df = blobs().cache()
-    val init = Array(Array(1.0, 1.0), Array(9.0, 9.0), Array(-9.0, 7.0))
-    def fit(strategy: String): Array[Array[Double]] =
-      new GeneralizedKMeans().setK(3).setFeaturesCol("features")
-        .setMaxIter(5).setTol(0.0).setInitialCenters(init)
-        .setAssignmentStrategy(strategy).fit(df).clusterCenters
-    val plain = fit("broadcast")
-    spark.conf.set("graft.assign.chunkElems", "4")
-    val chunked =
-      try fit("chunked")
-      finally spark.conf.unset("graft.assign.chunkElems")
-    assert(plain.length == chunked.length)
-    plain.zip(chunked).foreach { case (a, b) =>
-      assert(a.sameElements(b), "chunk fold drifted from single broadcast")
-    }
-    df.unpersist()
   }
 
   // ---- MutualInformation driver-collect cap ----

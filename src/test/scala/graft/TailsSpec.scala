@@ -190,25 +190,6 @@ class TailsSpec extends SparkSpec {
     df.unpersist()
   }
 
-  test("crossJoin assignment strategy matches broadcast incl. tie-break") {
-    val df = blobs(perBlob = 40).cache()
-    val m = new GeneralizedKMeans().setK(3).setSeed(42).setMaxIter(5).fit(df)
-    val bc = Assignment.assign(df, "features", new SquaredEuclideanKernel,
-      m.clusterCenters, "broadcast")
-      .select("features", "cluster").collect()
-      .map(r => r.getSeq[Double](0) -> r.getInt(1)).toMap
-    val cj = Assignment.assign(df, "features", new SquaredEuclideanKernel,
-      m.clusterCenters, "crossjoin")
-      .select("features", "cluster").collect()
-      .map(r => r.getSeq[Double](0) -> r.getInt(1)).toMap
-    assert(cj == bc, "crossjoin and broadcast assignments must be identical")
-    // a full fit through the strategy also works
-    val m2 = new GeneralizedKMeans().setK(3).setSeed(42).setMaxIter(5)
-      .setAssignmentStrategy("crossjoin").fit(df)
-    assert(m2.numClusters == 3)
-    df.unpersist()
-  }
-
   test("generic Bregman D_F agrees with every hand-optimized divergence") {
     import graft.kernels._
     val rnd = new java.util.Random(11)
@@ -249,14 +230,6 @@ class TailsSpec extends SparkSpec {
       l1.divergence(Array(1.0, 2.0), Array(0.5, 3.0)))
   }
 
-  test("chunk budget probes executor memory") {
-    assert(Assignment.parseMemory("4g") == 4L * 1024 * 1024 * 1024)
-    assert(Assignment.parseMemory("512m") == 512L * 1024 * 1024)
-    assert(Assignment.parseMemory("1024") == 1024L)
-    val budget = Assignment.chunkElemsBudget(spark)
-    assert(budget >= (1L << 20) && budget <= Assignment.ChunkMaxElems)
-  }
-
   test("custom kernel registration: a user divergence fits through the estimator family") {
     // diagonal-weighted SE: the reference's custom-kernel extension
     // contract (implement the trait, hand it to any estimator by name)
@@ -292,23 +265,5 @@ class TailsSpec extends SparkSpec {
       assert(ex.getMessage.contains("diagwse"))
     } finally graft.kernels.KernelFactory.unregister("diagwse")
     assert(!graft.kernels.KernelFactory.supported.contains("diagwse"))
-  }
-
-  test("memory-adaptive chunking: chunk counts pinned at two executor sizes") {
-    def chunksFor(mem: String, k: Int, dim: Int): Int = {
-      val budget = Assignment.chunkElemsBudgetOf(Assignment.parseMemory(mem))
-      val perChunk = math.max(1, (budget / dim).toInt)
-      math.ceil(k.toDouble / perChunk).toInt
-    }
-    // 512m heap -> 512M/128 = 4M-elem budget; 100k centers x 64 dims
-    // (6.4M elems) splits into 2 chunks of <=65536 centers
-    assert(chunksFor("512m", 100000, 64) == 2)
-    // 4g heap -> capped 16M-elem budget; the same centers broadcast whole
-    assert(chunksFor("4g", 100000, 64) == 1)
-    // the DECISION threshold is the same budget: 6.4M elems exceeds the
-    // 512m budget (chunked tier) but not the 4g one (single broadcast)
-    val elems = 100000L * 64
-    assert(elems > Assignment.chunkElemsBudgetOf(Assignment.parseMemory("512m")))
-    assert(elems <= Assignment.chunkElemsBudgetOf(Assignment.parseMemory("4g")))
   }
 }
