@@ -1,14 +1,13 @@
 package graft.clustering
 
 import org.apache.spark.ml.Estimator
-import org.apache.spark.ml.linalg.{SparseVector, Vector}
+import org.apache.spark.ml.linalg.{SQLDataTypes, SparseVector, Vector}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.Identifiable
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 /** K-means for high-dimensional sparse data: iterates NON-ZERO entries
@@ -18,12 +17,15 @@ import org.apache.spark.storage.StorageLevel
   * ||x||^2 + ||mu||^2 - 2<x,mu> over nnz.)
   *
   * Scale design: rows stay (indices, values) pairs end to end —
-  *  - assignment: one UDF pass, O(k * nnz) per row against broadcast dense
-  *    centers with precomputed ||mu||^2 (the 700+-dim sparse-text use case
-  *    in the reference's README is exactly this shape);
-  *  - update: one shuffle-free job whose partitions scatter nnz values
-  *    into a dense k x d buffer, tree-reduced to the driver — O(nnz) adds
-  *    per row (a densify-first plan does O(d));
+  *  - setup: one job decodes every row once into a cached SparseVector and
+  *    returns the row count, the dimension and a seeded uniform sample of
+  *    rows for the k-means++ candidate pool;
+  *  - assignment: O(k * nnz) per row against dense centers with
+  *    precomputed ||mu||^2 (the 700+-dim sparse-text use case in the
+  *    reference's README is exactly this shape);
+  *  - update: the same shuffle-free job as the assignment — partitions
+  *    scatter nnz values into a dense k x d buffer, tree-reduced to the
+  *    driver — O(nnz) adds per row (a densify-first plan does O(d));
   *  - `auto` mode samples rows, estimates the density ratio and falls back
   *    to the dense engine when the data isn't actually sparse.
   * Supported sparse divergences: squaredEuclidean and spherical (depend on
@@ -117,7 +119,6 @@ class SparseKMeans(override val uid: String)
 
   private def fitSparse(df: DataFrame, t0: Long): GeneralizedKMeansModel = {
     val spark = df.sparkSession
-    val sc = spark.sparkContext
     val mode = $(divergence).trim.toLowerCase match {
       case "cosine" | "spherical" | "angular" => "spherical"
       case "kl" | "kullbackleibler"           => "kl"
@@ -127,58 +128,55 @@ class SparseKMeans(override val uid: String)
     val spherical = mode == "spherical"
     val eps = $(smoothing)
 
-    // decompose vectors ONCE into (indices, values); rows never densify
-    val isVector = df.schema($(featuresCol)).dataType ==
-      org.apache.spark.ml.linalg.SQLDataTypes.VectorType
-    val toSparse =
-      if (isVector) udf { (v: Vector) =>
-        v match {
-          case sv: SparseVector => (sv.size, sv.indices.toSeq, sv.values.toSeq)
-          case d =>
-            val idx = (0 until d.size).filter(d(_) != 0.0)
-            (d.size, idx, idx.map(d(_)))
-        }
+    // decode rows ONCE into SparseVectors; rows never densify
+    val featCol = $(featuresCol)
+    val isVector = df.schema(featCol).dataType == SQLDataTypes.VectorType
+    val vectorType = SQLDataTypes.VectorType.asInstanceOf[UserDefinedType[Vector]]
+    val input = df.select(if (isVector) col(featCol) else col(featCol).cast("array<double>"))
+    val rows = input.queryExecution.toRdd.map { r =>
+      if (r.isNullAt(0)) throw new IllegalArgumentException(s"null features in column '$featCol'")
+      if (isVector) SparseKMeans.sparseOf(vectorType.deserialize(r.getStruct(0, 4)))
+      else SparseKMeans.sparseOf(r.getArray(0).toDoubleArray())
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+
+    // one pass fills the cache and returns the row count, the dimension and
+    // the candidate pool for seeding: the poolSize rows with the smallest
+    // seeded uniform keys (a uniform sample of min(n, poolSize) rows), so
+    // disjoint-support clusters each get a candidate (a pool of 10k draws
+    // misses a 1/k-mass cluster with prob ~k*e^-10)
+    val poolSize = math.max(10 * $(k), 20)
+    val seed0 = $(seed)
+    val parts = rows.mapPartitionsWithIndex { (p, it) =>
+      val rnd = new java.util.Random(seed0 + 7919L * p)
+      val pool = scala.collection.mutable.PriorityQueue.empty[(Double, SparseVector)](
+        Ordering.by[(Double, SparseVector), Double](_._1))
+      var n = 0L
+      var dim = 0
+      it.foreach { v =>
+        n += 1
+        dim = math.max(dim, v.size)
+        val key = rnd.nextDouble()
+        if (pool.size < poolSize) pool.enqueue(key -> v)
+        else if (key < pool.head._1) { pool.dequeue(); pool.enqueue(key -> v) }
       }
-      else udf { (xs: Seq[Double]) =>
-        val a = xs.toArray
-        val idx = a.indices.filter(a(_) != 0.0)
-        (a.length, idx, idx.map(a(_)))
-      }
-    val data = df.select(toSparse(col($(featuresCol))).as("s"))
-      .select(col("s._1").as("d"), col("s._2").as("idx"), col("s._3").as("vals"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // row count and dimension in one shuffle-free pass (it also fills the
-    // cache); the (idx, vals) rows are then re-read by every iteration
-    val rows = data.select(col("idx"), col("vals")).queryExecution.toRdd
-    val (n, dim) = data.select(col("d")).queryExecution.toRdd
-      .aggregate((0L, 0))((a, r) => (a._1 + 1, math.max(a._2, r.getInt(0))),
-        (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
+      Iterator.single((n, dim, pool.toArray))
+    }.collect()
+    val n = parts.map(_._1).sum
+    val dim = parts.map(_._2).foldLeft(0)(math.max)
     require(n > 0, "empty input")
 
-    // init: k distinct sampled rows, densified driver-side (k x d only)
-    def densify(idx: Seq[Int], vals: Seq[Double]): Array[Double] = {
-      val a = new Array[Double](dim)
-      idx.iterator.zip(vals.iterator).foreach { case (i, v) => a(i) = v }
-      a
-    }
-    // sample a candidate pool (O(k) rows densified driver-side), then
-    // local k-means++ seeding so disjoint-support clusters each get a seed
-    // (a pool of 10k draws misses a 1/k-mass cluster with prob ~k*e^-10)
-    val poolSize = math.max(10 * $(k), 20)
     var centers: Array[Array[Double]] = initialCentersOpt match {
       case Some(cs) =>
         CenterInit.validateExplicit(cs, $(k), dim)
         cs.map(_.clone())
       case None =>
-        val sampled = data.select(col("idx"), col("vals"))
-          .sample(withReplacement = false,
-            math.min(1.0, 10.0 * poolSize / math.max(1L, n)), $(seed))
-          .orderBy(rand($(seed) + 7)) // de-bias the partition-prefix order
-          .limit(poolSize).collect()
-        val pool =
-          (if (sampled.length >= $(k)) sampled
-           else data.select(col("idx"), col("vals")).limit(poolSize).collect())
-            .map(r => densify(r.getSeq[Int](0), r.getSeq[Double](1)))
+        // densify the pool driver-side (O(k) rows), then local k-means++
+        val pool = parts.flatMap(_._3).sortBy(_._1).take(poolSize).map { case (_, v) =>
+          val a = new Array[Double](dim)
+          var i = 0
+          while (i < v.indices.length) { a(v.indices(i)) = v.values(i); i += 1 }
+          a
+        }
         if (pool.length <= $(k)) pool
         else CenterInit.localKMeansPlusPlusBest(pool, Array.fill(pool.length)(1.0),
           $(k), graft.kernels.KernelFactory($(divergence), $(smoothing)), $(seed))
@@ -198,14 +196,10 @@ class SparseKMeans(override val uid: String)
         // nnz rows explode to (cluster, d, v, w=1); each (cluster, d) also
         // gets a synthetic v=0 row of weight n_c - nnzCount. Dims with no
         // nonzero anywhere in a cluster stay 0 (the majority value).
-        val bc = sc.broadcast(near)
-        val asgUdf = udf { (idx: Seq[Int], vals: Seq[Double]) =>
-          bc.value(idx.toArray, vals.toArray)
-        }
-        val assigned = data
-          .withColumn("__b", asgUdf(col("idx"), col("vals")))
-          .select(col("idx"), col("vals"),
-            col("__b._1").as("cluster"), col("__b._2").as("dist"))
+        val assigned = spark.createDataFrame(rows.map { v =>
+          val (c, dist) = near(v.indices, v.values)
+          Row(v.indices, v.values, c, dist)
+        }, SparseKMeans.AssignedSchema)
         distortion += medianUpdateSparse(assigned, dim, updated)
       } else {
         // kl sums SHIFTED gradients grad(v)-grad(0) = log((v+eps)/eps), so
@@ -239,7 +233,7 @@ class SparseKMeans(override val uid: String)
       iter += 1
       if (movement < $(tol)) converged = true
     }
-    data.unpersist()
+    rows.unpersist()
 
     val model = new GeneralizedKMeansModel(uid, centers, $(divergence), $(smoothing))
     model.trainingSummary = Some(TrainingSummary(
@@ -302,6 +296,34 @@ class SparseKMeans(override val uid: String)
 }
 
 object SparseKMeans extends org.apache.spark.ml.util.DefaultParamsReadable[SparseKMeans] {
+
+  /** The nonzeros of a row, as a SparseVector of the row's size. */
+  private[clustering] def sparseOf(v: Vector): SparseVector = v match {
+    case sv: SparseVector => sv
+    case d                => sparseOf(d.toArray)
+  }
+
+  private[clustering] def sparseOf(a: Array[Double]): SparseVector = {
+    var nnz = 0
+    var i = 0
+    while (i < a.length) { if (a(i) != 0.0) nnz += 1; i += 1 }
+    val idx = new Array[Int](nnz)
+    val vals = new Array[Double](nnz)
+    var t = 0
+    i = 0
+    while (i < a.length) {
+      if (a(i) != 0.0) { idx(t) = i; vals(t) = a(i); t += 1 }
+      i += 1
+    }
+    new SparseVector(a.length, idx, vals)
+  }
+
+  /** Rows of one sparse K-medians assignment pass. */
+  private val AssignedSchema = StructType(Seq(
+    StructField("idx", ArrayType(IntegerType, containsNull = false)),
+    StructField("vals", ArrayType(DoubleType, containsNull = false)),
+    StructField("cluster", IntegerType, nullable = false),
+    StructField("dist", DoubleType, nullable = false)))
 
   /** Nearest center of a sparse row (idx, vals) in O(nnz) per center,
     * ties to the lowest index: the dense divergence decomposed into a
@@ -368,7 +390,7 @@ object SparseKMeans extends org.apache.spark.ml.util.DefaultParamsReadable[Spars
     }
   }
 
-  /** One sparse Lloyd pass over (idx, vals) rows: assign each row with
+  /** One sparse Lloyd pass over the rows: assign each row with
     * `near`, then per cluster (Σ x, row count, Σ dist) into one k×(dim+2)
     * buffer (the CenterSums layout) — KL sums the shifted gradient
     * log((v+eps)/eps) — in ONE job with no shuffle: each partition
@@ -377,7 +399,7 @@ object SparseKMeans extends org.apache.spark.ml.util.DefaultParamsReadable[Spars
     * tree-reduced. The centers travel in the task closure, so every task
     * reads the iteration's own snapshot.
     */
-  private[clustering] def clusterSums(rows: RDD[InternalRow], near: Nearest,
+  private[clustering] def clusterSums(rows: RDD[SparseVector], near: Nearest,
       dim: Int): Array[Double] = {
     val width = dim + 2
     val k = near.centers.length
@@ -385,9 +407,9 @@ object SparseKMeans extends org.apache.spark.ml.util.DefaultParamsReadable[Spars
     val klShift = near.mode == "kl"
     rows.mapPartitions { it =>
       val buf = new Array[Double](k * width)
-      it.foreach { r =>
-        val idx = r.getArray(0).toIntArray()
-        val vals = r.getArray(1).toDoubleArray()
+      it.foreach { v =>
+        val idx = v.indices
+        val vals = v.values
         val (c, dist) = near(idx, vals)
         val base = c * width
         var i = 0

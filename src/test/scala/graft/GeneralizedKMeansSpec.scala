@@ -39,6 +39,13 @@ class GeneralizedKMeansSpec extends SparkSpec {
     }
   }
 
+  test("expression and broadcast assignment agree") {
+    val m = new GeneralizedKMeans().setK(3).setSeed(5).setMaxIter(10).fit(blobs)
+    val e = m.setAssignmentStrategy("expression").transform(blobs).select("prediction").collect().map(_.getInt(0)).toSeq
+    val b = m.setAssignmentStrategy("broadcast").transform(blobs).select("prediction").collect().map(_.getInt(0)).toSeq
+    assert(e == b)
+  }
+
   test("assignmentStrategy: an unknown name is refused at set time; a persisted model " +
     "carrying each accepted name loads and transforms") {
     val ex = intercept[IllegalArgumentException](new GeneralizedKMeans().setAssignmentStrategy("elkn"))

@@ -190,6 +190,25 @@ class TailsSpec extends SparkSpec {
     df.unpersist()
   }
 
+  test("crossJoin assignment strategy matches broadcast incl. tie-break") {
+    val df = blobs(perBlob = 40).cache()
+    val m = new GeneralizedKMeans().setK(3).setSeed(42).setMaxIter(5).fit(df)
+    val bc = Assignment.assign(df, "features", new SquaredEuclideanKernel,
+      m.clusterCenters, "broadcast")
+      .select("features", "cluster").collect()
+      .map(r => r.getSeq[Double](0) -> r.getInt(1)).toMap
+    val cj = Assignment.assign(df, "features", new SquaredEuclideanKernel,
+      m.clusterCenters, "crossjoin")
+      .select("features", "cluster").collect()
+      .map(r => r.getSeq[Double](0) -> r.getInt(1)).toMap
+    assert(cj == bc, "crossjoin and broadcast assignments must be identical")
+    // a full fit through the strategy also works
+    val m2 = new GeneralizedKMeans().setK(3).setSeed(42).setMaxIter(5)
+      .setAssignmentStrategy("crossjoin").fit(df)
+    assert(m2.numClusters == 3)
+    df.unpersist()
+  }
+
   test("generic Bregman D_F agrees with every hand-optimized divergence") {
     import graft.kernels._
     val rnd = new java.util.Random(11)

@@ -3,7 +3,7 @@ package graft
 import graft.clustering._
 import org.apache.spark.sql.functions._
 
-/** FeatureTransform pipeline + chunked assignment tier. */
+/** FeatureTransform pipeline + the chunked assignment alias. */
 class TransformSpec extends SparkSpec {
 
   test("log1p/epsilonShift/normalize expressions match driver-side math and invert") {
@@ -68,5 +68,25 @@ class TransformSpec extends SparkSpec {
     val orig = m.clusterCenters.map(t.inverseCenter).map(_(0)).sorted
     assert(orig(0) > 3 && orig(0) < 15, s"center0 ${orig(0)}")
     assert(orig(1) > 200 && orig(1) < 800, s"center1 ${orig(1)}")
+  }
+
+  test("chunked assignment equals broadcast assignment (tie-break included)") {
+    import spark.implicits._
+    val rnd = new java.util.Random(9)
+    val df = (1 to 300).map(_ => Seq(rnd.nextGaussian(), rnd.nextGaussian(), rnd.nextGaussian()))
+      .toDF("f")
+    val centers = Array.fill(17)(Array(rnd.nextGaussian(), rnd.nextGaussian(), rnd.nextGaussian()))
+    val kern = new graft.kernels.SquaredEuclideanKernel
+    val a = Assignment.assign(df, "f", kern, centers, "broadcast")
+      .select("f", "cluster", "dist").collect()
+      .map(r => r.getSeq[Double](0) -> (r.getInt(1), r.getDouble(2))).toMap
+    val b = Assignment.assign(df, "f", kern, centers, "chunked")
+      .select("f", "cluster", "dist").collect()
+    assert(b.length == 300)
+    b.foreach { r =>
+      val (ec, ed) = a(r.getSeq[Double](0))
+      assert(r.getInt(1) == ec, s"cluster mismatch")
+      assert(math.abs(r.getDouble(2) - ed) < 1e-12)
+    }
   }
 }
